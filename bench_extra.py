@@ -5,13 +5,14 @@ instrumentation the optimization work needs:
 
 * run a single bench entry (same inputs, same call as bench.py) with
   per-pass wall times and the Spark job count it costs;
-* dump ``.explain("formatted")`` for the representative plan of each
-  entry into ``plans/r06/<name>_<tag>.txt``.
+* dump ``.explain("formatted")`` for the representative plan(s) of
+  each entry into ``<plans-dir>/<name>_<frame>_<tag>.txt``.
 
 Usage::
 
     python bench_extra.py <entry> [more entries...] [--passes N]
-                          [--explain-tag before|after]  # plan dump only
+    python bench_extra.py <entry> [more entries...] \
+        --explain-tag before|after --plans-dir DIR      # plan dump only
     python bench_extra.py --list
 
 Environment mirrors bench.py: $SPARK_GRAFT_SF_DIR, $SPARK_GRAFT_CPUS.
@@ -455,7 +456,8 @@ def plan_frames(ctx, name):
     entry's hot plan(s). Loop operators expose one inner round; the
     special key ``_conf_rows`` asks the caller to explain under the
     loop-scoped config (plans/loopconf.py), the way the operator
-    actually executes the round."""
+    actually executes the round, and ``_persisted`` lists the frames
+    the caller unpersists once the plans are written."""
     from cminer_spark.plans.checkpoint import truncate_lineage
 
     if name == "pagerank_events":
@@ -488,7 +490,8 @@ def plan_frames(ctx, name):
         sums = joined.select(
             "dst", (F.col("p") * F.col("rank")).alias("m")
         ).groupBy("dst").agg(F.sum("m").alias("in_mass"))
-        return {"superstep_sums": sums, "_conf_rows": ctx.edges.count()}
+        return {"superstep_sums": sums, "_conf_rows": ctx.edges.count(),
+                "_persisted": [adj]}
     if name == "cc_events":
         from cminer_spark.operators.components import (
             _large_star,
@@ -503,17 +506,11 @@ def plan_frames(ctx, name):
         e = truncate_lineage(e)
         return {"round": _small_star(_large_star(e)), "_conf_rows": ctx.edges.count()}
     if name == "lpa4_events":
+        from cminer_spark.operators.graph import undirected_adjacency
         from cminer_spark.operators.lpa import _lpa_round
 
         edges = ctx.edges
-        sym = (
-            edges.where(F.col("src") != F.col("dst"))
-            .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-            .distinct()
-        )
-        sym = sym.union(
-            sym.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct().persist()
+        sym = undirected_adjacency(edges).persist()
         all_v = (
             edges.select(F.col("src").alias("v_id"))
             .union(edges.select(F.col("dst").alias("v_id")))
@@ -522,7 +519,8 @@ def plan_frames(ctx, name):
         labels = truncate_lineage(
             all_v.select("v_id", F.col("v_id").alias("label"))
         )
-        return {"round": _lpa_round(sym, labels), "_conf_rows": ctx.edges.count()}
+        return {"round": _lpa_round(sym, labels), "_conf_rows": sym.count(),
+                "_persisted": [sym]}
     if name == "triangles_events":
         from cminer_spark.operators.triangles import triangle_stats
 
@@ -544,14 +542,14 @@ def plan_frames(ctx, name):
             .groupBy("v_id")
             .agg(*[F.bit_or(c).alias(c) for c in cols])
         )
-        return {"hop": hop, "_conf_rows": sym.count()}
+        return {"hop": hop, "_conf_rows": sym.count(), "_persisted": [sym]}
     if name == "mis_events":
         # one Luby round: frontier-filtered adjacency join, min-priority
         # aggregate, winner/out status fold
-        from cminer_spark.operators.graph import _und_sym
-        from cminer_spark.operators.mis import UNDECIDED, _pri
+        from cminer_spark.operators.graph import undirected_adjacency
+        from cminer_spark.operators.mis import UNDECIDED, _luby_round
 
-        sym = _und_sym(ctx.edges).persist()
+        sym = undirected_adjacency(ctx.edges).persist()
         all_v = (
             ctx.edges.select(F.col("src").alias("v_id"))
             .union(ctx.edges.select(F.col("dst").alias("v_id")))
@@ -560,26 +558,15 @@ def plan_frames(ctx, name):
         st = truncate_lineage(
             all_v.select("v_id", F.lit(UNDECIDED).alias("status"))
         )
-        und = st.where(F.col("status") == UNDECIDED)
-        act = sym.join(
-            und.select(
-                F.col("v_id").alias("nbr"), _pri("v_id").alias("pu")
-            ).hint("shuffle_hash"),
-            "nbr",
-        ).join(und.select(F.col("v_id").alias("v")).hint("shuffle_hash"), "v")
-        mn = act.groupBy(F.col("v").alias("v_id")).agg(
-            F.min("pu").alias("mp")
-        )
-        scored = st.join(mn.hint("shuffle_hash"), "v_id", "left")
-        return {"round_min": mn, "round_scored": scored,
-                "_conf_rows": sym.count()}
+        return {"round": _luby_round(sym, st), "_conf_rows": sym.count(),
+                "_persisted": [sym]}
     if name == "greedy_color_events":
         # one Jones-Plassmann round: adjacency x state x uncolored
         # frontier, combinable (min uncolored pri, used-color set) agg
-        from cminer_spark.operators.coloring import UNCOLORED, _pri
-        from cminer_spark.operators.graph import _und_sym
+        from cminer_spark.operators.coloring import UNCOLORED, _jp_round, _pri
+        from cminer_spark.operators.graph import undirected_adjacency
 
-        sym = _und_sym(ctx.edges).persist()
+        sym = undirected_adjacency(ctx.edges).persist()
         all_v = (
             ctx.edges.select(F.col("src").alias("v_id"))
             .union(ctx.edges.select(F.col("dst").alias("v_id")))
@@ -596,35 +583,16 @@ def plan_frames(ctx, name):
                 _pri(F.col("v_id"), F.col("deg")).alias("pri"),
             )
         )
-        nbr_st = st.select(
-            F.col("v_id").alias("nbr"),
-            F.col("pri").alias("np"),
-            F.col("color").alias("nc"),
-        )
-        unc_v = st.where(F.col("color") == UNCOLORED).select(
-            F.col("v_id").alias("v")
-        )
-        g = (
-            sym.join(nbr_st.hint("shuffle_hash"), "nbr")
-            .join(unc_v.hint("shuffle_hash"), "v")
-            .groupBy(F.col("v").alias("v_id"))
-            .agg(
-                F.min(
-                    F.when(F.col("nc") == UNCOLORED, F.col("np"))
-                ).alias("mp"),
-                F.collect_set(
-                    F.when(F.col("nc") != UNCOLORED, F.col("nc"))
-                ).alias("used"),
-            )
-        )
-        return {"round_agg": g, "_conf_rows": sym.count()}
+        return {"round": _jp_round(sym, st, 1), "_conf_rows": sym.count(),
+                "_persisted": [sym]}
     if name == "feature_prop_events":
         # one damped-averaging round over the exploded (v_id, pos, val)
-        # state (bench call: 8-dim features, rounds=2, alpha=0.5)
-        from cminer_spark.operators.graph import _und_sym
+        # state (bench call: 8-dim features, rounds=2, alpha=0.5).
+        # No _conf_rows: propagate_features runs under the session conf.
+        from cminer_spark.operators.graph import undirected_adjacency
         from cminer_spark.operators.propagation import _prop_round
 
-        sym = truncate_lineage(_und_sym(ctx.edges))
+        sym = truncate_lineage(undirected_adjacency(ctx.edges))
         feats = (
             ctx.edges.select(F.col("src").alias("v_id"))
             .union(ctx.edges.select(F.col("dst").alias("v_id")))
@@ -648,8 +616,7 @@ def plan_frames(ctx, name):
                 "v_id", "pos", F.col("val").cast("double").alias("val")
             )
         )
-        return {"round": _prop_round(sym, st, alpha=0.5),
-                "_conf_rows": st.count()}
+        return {"round": _prop_round(sym, st, alpha=0.5)}
     if name == "edge_extract_synth":
         from cminer_spark.operators import extract_edges
 
@@ -710,14 +677,12 @@ def plan_frames(ctx, name):
     return {}
 
 
-def _explain_frames(frames, name, explain_tag):
+def _explain_frames(frames, name, explain_tag, plans_dir):
     import contextlib
     import io
 
     for label, df in frames.items():
-        out = os.path.join(
-            _HERE, "plans", "r06", f"{name}_{explain_tag}.txt"
-        )
+        out = os.path.join(plans_dir, f"{name}_{label}_{explain_tag}.txt")
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
@@ -740,11 +705,17 @@ def main() -> None:
         i = args.index("--passes")
         passes = int(args[i + 1])
         del args[i : i + 2]
-    explain_tag = None
+    explain_tag = plans_dir = None
     if "--explain-tag" in args:
         i = args.index("--explain-tag")
         explain_tag = args[i + 1]
         del args[i : i + 2]
+    if "--plans-dir" in args:
+        i = args.index("--plans-dir")
+        plans_dir = args[i + 1]
+        del args[i : i + 2]
+    if explain_tag and not plans_dir:
+        sys.exit("--explain-tag needs --plans-dir DIR")
     names = [a for a in args if not a.startswith("-")]
 
     os.environ.setdefault("CMINER_DRIVER_MEM", "48g")
@@ -770,10 +741,11 @@ def main() -> None:
             print(f"unknown entry: {name}", file=sys.stderr)
             continue
         if explain_tag:
-            os.makedirs(os.path.join(_HERE, "plans", "r06"), exist_ok=True)
+            os.makedirs(plans_dir, exist_ok=True)
             frames = plan_frames(ctx, name)
             call = frames.pop("_call", None)
             conf_rows = frames.pop("_conf_rows", None)
+            persisted = frames.pop("_persisted", [])
             if call is not None:
                 frames = {"stats": call()}
             import contextlib as _ctxlib
@@ -791,7 +763,9 @@ def main() -> None:
                 else _ctxlib.nullcontext()
             )
             with conf_cm:
-                _explain_frames(frames, name, explain_tag)
+                _explain_frames(frames, name, explain_tag, plans_dir)
+            for df in persisted:
+                df.unpersist()
             continue
         run = ENTRIES[name](ctx)
         secs, jobs = [], []

@@ -11,6 +11,7 @@ from cminer_spark.operators.graph import (
     degrees,
     degrees_by_type,
     hub_vertices,
+    undirected_adjacency,
 )
 from cminer_spark.operators.pagerank import pagerank
 from cminer_spark.operators.pregel import pregel, pregel_components
@@ -78,6 +79,7 @@ __all__ = [
     "degrees",
     "degrees_by_type",
     "hub_vertices",
+    "undirected_adjacency",
     "cooccurrence",
     "csr_blocks",
     "pagerank",

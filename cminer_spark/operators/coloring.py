@@ -54,16 +54,13 @@ colors).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cminer_spark.operators.graph import _und_sym
-from cminer_spark.plans.checkpoint import truncate_lineage
-from cminer_spark.plans.loopconf import superstep_conf
+from cminer_spark.operators.graph import undirected_adjacency
+from cminer_spark.plans.loop import LoopInfo, superstep_loop
 
-__all__ = ["greedy_coloring", "ColoringInfo"]
+__all__ = ["greedy_coloring"]
 
 UNCOLORED = -1
 
@@ -71,13 +68,6 @@ UNCOLORED = -1
 # targets (10^12 edges / sparse), so 10^10 - deg is always 10-11
 # digits and the zero-padded prefix sorts degree-DESC lexicographically
 _PRI_BASE = 10_000_000_000
-
-
-@dataclass
-class ColoringInfo:
-    rounds: int = 0
-    converged: bool = False
-    uncolored: list = field(default_factory=list)
 
 
 def _pri(v_col, deg_col):
@@ -93,23 +83,70 @@ def _pri(v_col, deg_col):
     )
 
 
+def _jp_round(sym: DataFrame, st: DataFrame, rnd: int) -> DataFrame:
+    """One Jones-Plassmann round over ``sym(v, nbr)`` and
+    ``st(v_id, color, pri)``: adjacency x full state (neighbor side) x
+    uncolored frontier (vertex side), then a single combinable
+    aggregate yields both the winner test input (min uncolored-neighbor
+    priority) and the used-color set of colored neighbors."""
+    nbr_st = st.select(
+        F.col("v_id").alias("nbr"),
+        F.col("pri").alias("np"),
+        F.col("color").alias("nc"),
+    )
+    unc_v = st.where(F.col("color") == UNCOLORED).select(
+        F.col("v_id").alias("v")
+    )
+    g = (
+        sym.join(nbr_st.hint("shuffle_hash"), "nbr")
+        .join(unc_v.hint("shuffle_hash"), "v")
+        .groupBy(F.col("v").alias("v_id"))
+        .agg(
+            F.min(F.when(F.col("nc") == UNCOLORED, F.col("np"))).alias("mp"),
+            F.collect_set(
+                F.when(F.col("nc") != UNCOLORED, F.col("nc"))
+            ).alias("used"),
+        )
+    )
+    is_winner = (F.col("color") == UNCOLORED) & (
+        F.col("mp").isNull() | (F.col("pri") < F.col("mp"))
+    )
+    return st.join(g.hint("shuffle_hash"), "v_id", "left").select(
+        "v_id",
+        F.when(
+            is_winner,
+            F.array_min(
+                F.array_except(
+                    F.sequence(
+                        F.lit(0).cast("long"), F.lit(rnd - 1).cast("long")
+                    ),
+                    F.coalesce(F.col("used"), F.array().cast("array<long>")),
+                )
+            ),
+        )
+        .otherwise(F.col("color"))
+        .alias("color"),
+        "pri",
+    )
+
+
 def greedy_coloring(
     edges: DataFrame,
     max_rounds: int = 20,
     vertices: DataFrame | None = None,
     stop_when_done: bool = True,
-) -> tuple[DataFrame, ColoringInfo]:
+) -> tuple[DataFrame, LoopInfo]:
     """Jones-Plassmann (largest-degree-first) coloring over the
     undirected simple projection of ``edges(src, dst)``.
 
     Returns ``(df(v_id, color), info)``: ``color >= 0`` is a proper
     distance-1 coloring of the colored subgraph; ``color == -1`` marks
     vertices the round budget left undecided (none once
-    ``info.converged``). ``stop_when_done=False`` runs exactly
-    ``max_rounds`` rounds (the fixed-depth gate variant).
+    ``info.converged``; ``info.uncolored`` counts them per round).
+    ``stop_when_done=False`` runs exactly ``max_rounds`` rounds (the
+    fixed-depth gate variant).
     """
-    info = ColoringInfo()
-    sym = _und_sym(edges).persist()
+    sym = undirected_adjacency(edges).persist()
 
     all_v = edges.select(F.col("src").alias("v_id")).union(
         edges.select(F.col("dst").alias("v_id"))
@@ -119,7 +156,7 @@ def greedy_coloring(
     deg = sym.groupBy(F.col("v").alias("v_id")).agg(
         F.count(F.lit(1)).alias("deg")
     )
-    st = (
+    st0 = (
         all_v.distinct()
         .join(deg.hint("shuffle_hash"), "v_id", "left")
         .select(
@@ -128,81 +165,17 @@ def greedy_coloring(
             _pri(F.col("v_id"), F.col("deg")).alias("pri"),
         )
     )
-    st = truncate_lineage(st)
-    n_sym = sym.count()
-
-    # Loop-scoped config (plans/loopconf.py): shuffle partitions sized
-    # to the symmetric adjacency, AQE off — one scheduler job per round.
-    with superstep_conf(edges.sparkSession, n_sym):
-        for rnd in range(1, max_rounds + 1):
-            # one pass: adjacency x full state (neighbor side) x uncolored
-            # frontier (vertex side), then a single combinable aggregate
-            # yields both the winner test input (min uncolored-neighbor
-            # priority) and the used-color set of colored neighbors.
-            nbr_st = st.select(
-                F.col("v_id").alias("nbr"),
-                F.col("pri").alias("np"),
-                F.col("color").alias("nc"),
-            )
-            unc_v = st.where(F.col("color") == UNCOLORED).select(
-                F.col("v_id").alias("v")
-            )
-            g = (
-                sym.join(nbr_st.hint("shuffle_hash"), "nbr")
-                .join(unc_v.hint("shuffle_hash"), "v")
-                .groupBy(F.col("v").alias("v_id"))
-                .agg(
-                    F.min(
-                        F.when(F.col("nc") == UNCOLORED, F.col("np"))
-                    ).alias("mp"),
-                    F.collect_set(
-                        F.when(F.col("nc") != UNCOLORED, F.col("nc"))
-                    ).alias("used"),
-                )
-            )
-            is_winner = (F.col("color") == UNCOLORED) & (
-                F.col("mp").isNull() | (F.col("pri") < F.col("mp"))
-            )
-            new_st = st.join(g.hint("shuffle_hash"), "v_id", "left").select(
-                "v_id",
-                F.when(
-                    is_winner,
-                    F.array_min(
-                        F.array_except(
-                            F.sequence(
-                                F.lit(0).cast("long"),
-                                F.lit(rnd - 1).cast("long"),
-                            ),
-                            F.coalesce(
-                                F.col("used"), F.array().cast("array<long>")
-                            ),
-                        )
-                    ),
-                )
-                .otherwise(F.col("color"))
-                .alias("color"),
-                "pri",
-            )
-
-            obs = None
-            to_save = new_st
-            if stop_when_done:
-                from pyspark.sql import Observation
-
-                obs = Observation(f"color_unc_{rnd}")
-                to_save = new_st.observe(
-                    obs,
-                    F.sum(
-                        (F.col("color") == UNCOLORED).cast("long")
-                    ).alias("unc"),
-                )
-            st = truncate_lineage(to_save)
-            uncolored = int(obs.get["unc"] or 0) if obs is not None else -1
-            info.rounds = rnd
-            info.uncolored.append(uncolored)
-            if uncolored == 0:
-                info.converged = True
-                break
-
+    st, info = superstep_loop(
+        st0,
+        lambda st, rnd: _jp_round(sym, st, rnd),
+        n_rows=sym.count(),
+        max_rounds=max_rounds,
+        stop=(
+            F.sum((F.col("color") == UNCOLORED).cast("long"))
+            if stop_when_done
+            else None
+        ),
+        name="color",
+    )
     sym.unpersist()
     return st.select("v_id", "color"), info

@@ -23,6 +23,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cminer_spark.operators.pregel import _hashmin, pregel_components
 from cminer_spark.plans.checkpoint import SuperstepCheckpoint, truncate_lineage
 from cminer_spark.plans.loopconf import superstep_conf
 
@@ -257,73 +258,27 @@ def hashmin_components(
 ) -> DataFrame:
     """Fixed-``rounds`` hash-min label propagation:
     label'(v) = min(label(v), min_{u~v} label(u)); exact CC when
-    ``rounds`` ≥ graph diameter. Deterministic integer logic — used as
-    a second implementation for differential tests and as the
-    SQL-unrollable gate variant.
+    ``rounds`` ≥ graph diameter. Deterministic integer logic — the
+    differential oracle for the star algorithm and the SQL-unrollable
+    gate variant. Runs as the
+    :func:`~cminer_spark.operators.pregel.pregel_components` vertex
+    program.
 
-    ``verify_converged=True`` runs ONE extra round after ``rounds``
-    and raises ``ValueError`` if any label still changes — callers who
+    ``verify_converged=True`` allows ONE extra round after ``rounds``
+    and raises ``ValueError`` if it still changes a label — callers who
     treat the fixed-round output as exact CC (``dedup_clusters``) get
     a loud failure instead of silently split components when the
-    graph diameter exceeds ``rounds``. The returned labels are still
-    the ``rounds``-round result (the probe round is discarded), so
-    fixed-round oracles keep matching."""
-    sym = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .distinct()
-    )
-    sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-    all_v = edges.select(F.col("src").alias("v_id")).union(
-        edges.select(F.col("dst").alias("v_id"))
-    )
-    if vertices is not None:
-        all_v = all_v.union(vertices.select("v_id"))
-    labels = all_v.distinct().select("v_id", F.col("v_id").alias("component"))
-    sym = sym.persist()
-    n_sym = sym.count()
-    with superstep_conf(edges.sparkSession, n_sym):
-        for _ in range(rounds):
-            nbr_min = (
-                sym.join(
-                    labels.select(F.col("v_id").alias("u"), "component").hint(
-                        "shuffle_hash"
-                    ),
-                    "u",
-                )
-                .groupBy(F.col("v").alias("v_id"))
-                .agg(F.min("component").alias("nbr_min"))
-            )
-            labels = truncate_lineage(
-                labels.join(
-                    nbr_min.hint("shuffle_hash"), "v_id", "left"
-                ).select(
-                    "v_id",
-                    F.least(
-                        "component", F.coalesce("nbr_min", "component")
-                    ).alias("component"),
-                )
-            )
-        if verify_converged:
-            probe = (
-                sym.join(
-                    labels.select(F.col("v_id").alias("u"), "component").hint(
-                        "shuffle_hash"
-                    ),
-                    "u",
-                )
-                .groupBy(F.col("v").alias("v_id"))
-                .agg(F.min("component").alias("nbr_min"))
-                .join(labels, "v_id")
-                .where(F.col("nbr_min") < F.col("component"))
-            )
-            n_changed = probe.count()
-            if n_changed:
-                sym.unpersist()
-                raise ValueError(
-                    f"hashmin_components: {n_changed} labels still changing "
-                    f"after {rounds} rounds — graph diameter exceeds the "
-                    "fixed round count; raise `rounds`"
-                )
-    sym.unpersist()
+    graph diameter exceeds ``rounds``. The run stops at the first
+    round that changes nothing, so the returned labels are the
+    ``rounds``-round result either way and fixed-round oracles keep
+    matching."""
+    if not verify_converged:
+        return pregel_components(edges, rounds, vertices)
+    labels, info = _hashmin(edges, rounds + 1, vertices, stop_when_stable=True)
+    if not info.converged:
+        raise ValueError(
+            f"hashmin_components: {info.history[-1]} labels still changing "
+            f"after {rounds} rounds — graph diameter exceeds the "
+            "fixed round count; raise `rounds`"
+        )
     return labels

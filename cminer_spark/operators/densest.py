@@ -32,7 +32,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cminer_spark.operators.graph import _und_sym
+from cminer_spark.operators.graph import undirected_adjacency
 from cminer_spark.plans.checkpoint import truncate_lineage
 
 __all__ = ["densest_subgraph", "DensestInfo"]
@@ -60,7 +60,7 @@ def densest_subgraph(
     trace. Runs until the graph empties or ``max_rounds``.
     """
     # canonical undirected simple edges (a < b), self-loops dropped
-    sym = _und_sym(edges)
+    sym = undirected_adjacency(edges)
     und = (
         sym.where(F.col("v") < F.col("nbr"))
         .select(F.col("v").alias("a"), F.col("nbr").alias("b"))

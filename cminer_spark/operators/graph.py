@@ -180,9 +180,12 @@ def label_catalog(vertices: DataFrame) -> DataFrame:
     )
 
 
-def _und_sym(edges: DataFrame) -> DataFrame:
+def undirected_adjacency(edges: DataFrame) -> DataFrame:
     """Symmetric distinct neighbor pairs ``(v, nbr)`` of the
-    undirected simple projection."""
+    undirected simple projection of ``edges(src, dst)``: parallel
+    edges collapse, self-loops drop, and each pair appears once per
+    direction. The shared input of the unweighted vertex-state loops
+    (LPA, MIS, coloring, k-core, hash-min CC)."""
     und = (
         edges.where(F.col("src") != F.col("dst"))
         .select(
@@ -272,7 +275,7 @@ def jaccard_similarity(
     # distinct's exchange is not dedupable across those differently-
     # shaped branches — without the cut the plan re-runs the |E|-sized
     # distinct shuffle per branch
-    sym = truncate_lineage(_und_sym(edges))
+    sym = truncate_lineage(undirected_adjacency(edges))
     deg = sym.groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
     pivots = sym.select(F.col("nbr").alias("shared"), F.col("v"))
     if max_pivot_degree is not None:
@@ -328,7 +331,7 @@ def jaccard_similarity_minhash(
     if n_hashes % bands:
         raise ValueError("bands must divide n_hashes")
     rows_per_band = n_hashes // bands
-    sym = _und_sym(edges)
+    sym = undirected_adjacency(edges)
     sig = sym.groupBy("v").agg(
         F.array(
             *[

@@ -23,11 +23,11 @@ Scale design:
   estimate values per vertex (≤ max-degree values, typically tiny,
   and strictly shrinking as estimates converge);
 * the symmetrized adjacency is built once, hash-partitioned on the
-  gather key and persisted; each round shuffles only the |V|-sized
-  estimate vector;
-* the changed-vertex count rides the state write via ``df.observe()``
-  (one job per round); state goes through
-  :class:`SuperstepCheckpoint` or the parquet double-buffer.
+  join key into the loop's own partition count and persisted; each
+  round shuffles only the |V|-sized estimate vector;
+* rounds run on :func:`~cminer_spark.plans.loop.superstep_loop`: the
+  changed-vertex count is its stop (one job per round), and a resume
+  from a committed fixpoint runs zero rounds.
 
 Semantics: undirected simple projection of ``edges(src, dst)`` —
 parallel edges collapse, self-loops are ignored (the networkx
@@ -37,26 +37,44 @@ vertices get core 0.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cminer_spark.plans.checkpoint import (
-    EphemeralStateStore,
-    SuperstepCheckpoint,
-    truncate_lineage,
-)
-from cminer_spark.plans.loopconf import superstep_conf
+from cminer_spark.operators.graph import undirected_adjacency
+from cminer_spark.plans.checkpoint import SuperstepCheckpoint
+from cminer_spark.plans.loop import LoopInfo, superstep_loop
+from cminer_spark.plans.loopconf import iteration_partitions
 
 
-@dataclass
-class CoreInfo:
-    rounds: int = 0
-    converged: bool = False
-    changed: list = field(default_factory=list)
-    n_vertices: int = 0
-    resumed_from: int | None = None
+def _hindex_round(sym: DataFrame, state: DataFrame) -> DataFrame:
+    """One h-index round over ``sym(v, nbr)``:
+    ``(v_id, core, core_prev)``."""
+    # neighbor estimates, pre-aggregated to (vertex, estimate,
+    # multiplicity) — the window below runs over DISTINCT estimate
+    # values per vertex, never the raw neighbor list
+    nb = sym.join(
+        state.select(F.col("v_id").alias("nbr"), F.col("core").alias("c")).hint(
+            "shuffle_hash"
+        ),
+        "nbr",
+    ).select("v", "c")
+    cnt = nb.groupBy("v", "c").agg(F.count(F.lit(1)).alias("k"))
+    w = (
+        Window.partitionBy("v")
+        .orderBy(F.desc("c"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    h = (
+        cnt.withColumn("ge", F.sum("k").over(w))
+        .select("v", F.least(F.col("c"), F.col("ge")).alias("m"))
+        .groupBy(F.col("v").alias("v_id"))
+        .agg(F.max("m").alias("h"))
+    )
+    return state.join(h.hint("shuffle_hash"), "v_id", "left").select(
+        "v_id",
+        F.least(F.col("core"), F.coalesce("h", F.lit(0))).cast("long").alias("core"),
+        F.col("core").alias("core_prev"),
+    )
 
 
 def core_numbers(
@@ -64,127 +82,36 @@ def core_numbers(
     vertices: DataFrame | None = None,
     max_rounds: int = 100,
     checkpoint: SuperstepCheckpoint | None = None,
-) -> tuple[DataFrame, CoreInfo]:
+) -> tuple[DataFrame, LoopInfo]:
     """Exact core number per vertex. Returns
-    ``(cores(v_id, core), info)``. ``max_rounds`` with
-    ``checkpoint=None`` and no convergence wanted: pass a small
-    fixed value (the estimate after k rounds is a valid UPPER bound
-    that the unrolled SQL gate mirrors)."""
+    ``(cores(v_id, core), info)``; ``info.history`` is the changed
+    count per round. ``max_rounds`` with ``checkpoint=None`` and no
+    convergence wanted: pass a small fixed value (the estimate after k
+    rounds is a valid UPPER bound that the unrolled SQL gate
+    mirrors)."""
     spark = edges.sparkSession
-    info = CoreInfo()
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    e = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    )
-    sym = (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-    )
+    sym = undirected_adjacency(edges)
     n_sym = sym.count()
-    iter_parts = min(shuffle_parts, max(1, -(-n_sym // 250_000)))
-    sym = sym.repartition(iter_parts, "v").persist()
+    sym = sym.repartition(iteration_partitions(spark, n_sym), "nbr").persist()
 
-    verts = sym.select(F.col("u").alias("v_id"))
+    verts = sym.select(F.col("v").alias("v_id"))
     if vertices is not None:
         verts = verts.union(vertices.select("v_id"))
-    verts = verts.distinct().persist()
-    n = verts.count()
-    info.n_vertices = n
-    if n == 0:
-        sym.unpersist()
-        verts.unpersist()
-        info.converged = True
-        return spark.createDataFrame([], "v_id long, core long"), info
-
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    start_round = 0
-    state = (
-        verts.join(deg.withColumnRenamed("u", "v_id"), "v_id", "left")
-        .select("v_id", F.coalesce("d", F.lit(0)).cast("long").alias("core"))
+    deg = sym.groupBy(F.col("v").alias("v_id")).agg(F.count(F.lit(1)).alias("d"))
+    state0 = verts.distinct().join(deg, "v_id", "left").select(
+        "v_id", F.coalesce("d", F.lit(0)).cast("long").alias("core")
     )
-    if checkpoint is not None:
-        resume = checkpoint.latest()
-        if resume is not None:
-            start_round, state, _meta = resume
-            state = state.select("v_id", "core")
-            info.resumed_from = start_round
-            if (_meta.get("metrics") or {}).get("changed") == 0:
-                info.rounds = start_round
-                info.converged = True
-                sym.unpersist()
-                verts.unpersist()
-                return state, info
-    state = truncate_lineage(state)
-    store = EphemeralStateStore(spark, "kcore") if checkpoint is None else None
-
-    from pyspark.sql import Observation
-
-    # loop-scoped config (plans/loopconf.py): graph-sized shuffle
-    # partitions, AQE off — one scheduler job per round
-    with superstep_conf(spark, n_sym):
-        for rnd in range(start_round + 1, max_rounds + 1):
-            # neighbor estimates, pre-aggregated to (vertex, estimate,
-            # multiplicity) — the window below runs over DISTINCT estimate
-            # values per vertex, never the raw neighbor list
-            nb = sym.join(
-                state.select(F.col("v_id").alias("v"), F.col("core").alias("c")).hint(
-                    "shuffle_hash"
-                ),
-                "v",
-            ).select(F.col("u"), F.col("c"))
-            cnt = nb.groupBy("u", "c").agg(F.count(F.lit(1)).alias("k"))
-            w = (
-                Window.partitionBy("u")
-                .orderBy(F.desc("c"))
-                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-            h = (
-                cnt.withColumn("ge", F.sum("k").over(w))
-                .select("u", F.least(F.col("c"), F.col("ge")).alias("m"))
-                .groupBy("u")
-                .agg(F.max("m").alias("h"))
-            )
-            new_state = (
-                state.join(h.withColumnRenamed("u", "v_id").hint("shuffle_hash"),
-                           "v_id", "left")
-                .select(
-                    "v_id",
-                    F.least(
-                        F.col("core"), F.coalesce("h", F.lit(0))
-                    ).cast("long").alias("core"),
-                    F.col("core").alias("core_prev"),
-                )
-            )
-            obs = Observation(f"kcore_chg_{rnd}")
-            to_save = new_state.observe(
-                obs,
-                F.sum((F.col("core") != F.col("core_prev")).cast("long")).alias(
-                    "chg"
-                ),
-            ).select("v_id", "core")
-            if checkpoint is not None:
-                saved = checkpoint.save(rnd, to_save, {})
-            else:
-                saved = store.save(to_save, rnd)
-            changed = int(obs.get["chg"] or 0)
-            info.rounds = rnd
-            info.changed.append(changed)
-            if checkpoint is not None:
-                checkpoint.update_metrics(rnd, {"changed": changed})
-            state = saved.select("v_id", "core")
-            if changed == 0:
-                info.converged = True
-                break
-
+    cores, info = superstep_loop(
+        state0,
+        lambda st, _rnd: _hindex_round(sym, st),
+        n_rows=n_sym,
+        max_rounds=max_rounds,
+        stop=F.sum((F.col("core") != F.col("core_prev")).cast("long")),
+        checkpoint=checkpoint,
+        name="kcore",
+    )
     sym.unpersist()
-    verts.unpersist()
-    result = state.select("v_id", "core")
-    if store is not None and info.rounds > start_round:
-        result = truncate_lineage(result)
-        store.close()
-    return result, info
+    return cores, info
 
 
 def k_core(

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cminer_spark.operators.graph import _und_sym
+from cminer_spark.operators.graph import undirected_adjacency
 
 __all__ = ["link_prediction_scores"]
 
@@ -66,7 +66,7 @@ def link_prediction_scores(
 
     A wedge pivot always has degree ≥ 2, so ``1/ln(deg)`` is finite.
     """
-    sym = _und_sym(edges)
+    sym = undirected_adjacency(edges)
     deg = sym.groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
 
     piv = sym.select(F.col("nbr").alias("pivot"), "v").join(

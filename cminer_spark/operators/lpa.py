@@ -13,17 +13,17 @@ SURVEY §2.7 mapping table entry: "Label propagation".
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cminer_spark.plans.checkpoint import SuperstepCheckpoint, truncate_lineage
-from cminer_spark.plans.loopconf import superstep_conf
+from cminer_spark.operators.graph import undirected_adjacency
+from cminer_spark.plans.checkpoint import SuperstepCheckpoint
+from cminer_spark.plans.loop import LoopInfo, superstep_loop
 
 
 def _lpa_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
-    """One synchronous LPA round: ``(v_id, label, label_prev)``.
+    """One synchronous LPA round over ``sym(v, nbr)``:
+    ``(v_id, label, label_prev)``.
 
     The per-vertex argmax is ONE combinable aggregate:
     ``mode(label, deterministic=True)`` is exactly "most frequent
@@ -40,10 +40,10 @@ def _lpa_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
     """
     winner = (
         sym.join(
-            labels.select(F.col("v_id").alias("u"), "label").hint(
+            labels.select(F.col("v_id").alias("nbr"), "label").hint(
                 "shuffle_hash"
             ),
-            "u",
+            "nbr",
         )
         .groupBy(F.col("v").alias("v_id"))
         .agg(F.mode("label", True).alias("new_label"))
@@ -55,13 +55,6 @@ def _lpa_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-@dataclass
-class LPAInfo:
-    rounds: int = 0
-    converged: bool = False
-    resumed_from: int | None = None
-
-
 def label_propagation(
     edges: DataFrame,
     max_rounds: int = 10,
@@ -69,28 +62,23 @@ def label_propagation(
     initial_labels: DataFrame | None = None,
     checkpoint: SuperstepCheckpoint | None = None,
     stop_when_stable: bool = True,
-) -> tuple[DataFrame, LPAInfo]:
+) -> tuple[DataFrame, LoopInfo]:
     """Run synchronous LPA on the undirected projection of
     ``edges(src, dst)``.
 
     ``initial_labels(v_id, label)`` defaults to ``label = v_id``.
-    Returns ``(labels(v_id, label), info)``.
+    Returns ``(labels(v_id, label), info)``; ``stop_when_stable``
+    stops at the first round that changes no label (the changed count
+    is ``info.history``).
     """
-    info = LPAInfo()
-
-    sym = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .distinct()
-    )
-    sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct().persist()
+    sym = undirected_adjacency(edges).persist()
 
     all_v = edges.select(F.col("src").alias("v_id")).union(
         edges.select(F.col("dst").alias("v_id"))
     )
     if vertices is not None:
         all_v = all_v.union(vertices.select("v_id"))
-    all_v = all_v.distinct().persist()
+    all_v = all_v.distinct()
 
     if initial_labels is not None:
         labels = all_v.join(initial_labels, "v_id", "left").select(
@@ -99,56 +87,18 @@ def label_propagation(
     else:
         labels = all_v.select("v_id", F.col("v_id").alias("label"))
 
-    start_round = 0
-    if checkpoint is not None:
-        resume = checkpoint.latest()
-        if resume is not None:
-            # resuming AT the fixpoint costs one redundant round whose
-            # deterministic-tie update is idempotent (changed == 0) —
-            # identical labels to the uninterrupted run, so unlike
-            # PageRank no saved-metric convergence check is needed
-            start_round, labels, _ = resume
-            info.resumed_from = start_round
-    labels = truncate_lineage(labels)
-    n_sym = sym.count()
-
-    # Loop-scoped config (plans/loopconf.py): shuffle partitions sized
-    # to the symmetric adjacency, AQE off — one scheduler job per round.
-    with superstep_conf(edges.sparkSession, n_sym):
-        for rnd in range(start_round + 1, max_rounds + 1):
-            new_labels = _lpa_round(sym, labels)
-
-            # The changed-count rides the state materialization via
-            # df.observe() — stop_when_stable costs zero extra jobs per
-            # round (the old-vs-new join is the one already producing
-            # new_labels; label_prev is consumed by the observation and
-            # never persisted).
-            obs = None
-            to_save = new_labels.select("v_id", "label")
-            if stop_when_stable:
-                from pyspark.sql import Observation
-
-                obs = Observation(f"lpa_chg_{rnd}")
-                to_save = new_labels.observe(
-                    obs,
-                    F.sum(
-                        (F.col("label") != F.col("label_prev")).cast("long")
-                    ).alias("chg"),
-                ).select("v_id", "label")
-
-            labels = (
-                checkpoint.save(rnd, to_save, {"round": rnd})
-                if checkpoint is not None
-                else truncate_lineage(to_save)
-            )
-            changed = int(obs.get["chg"] or 0) if obs is not None else -1
-            if checkpoint is not None:
-                checkpoint.update_metrics(rnd, {"changed": changed})
-            info.rounds = rnd
-            if changed == 0:
-                info.converged = True
-                break
-
+    labels, info = superstep_loop(
+        labels,
+        lambda st, _rnd: _lpa_round(sym, st),
+        n_rows=sym.count(),
+        max_rounds=max_rounds,
+        stop=(
+            F.sum((F.col("label") != F.col("label_prev")).cast("long"))
+            if stop_when_stable
+            else None
+        ),
+        checkpoint=checkpoint,
+        name="lpa",
+    )
     sym.unpersist()
-    all_v.unpersist()
     return labels, info

@@ -30,9 +30,9 @@ Scale design:
   a vanishing subgraph;
 * the undecided-count convergence probe rides the state write via
   ``df.observe()`` — one job per round;
-* state is ``(v_id, status)`` through ``truncate_lineage`` /
-  :class:`SuperstepCheckpoint` (priorities are recomputed, never
-  stored).
+* state is ``(v_id, status)`` through the
+  :func:`~cminer_spark.plans.loop.superstep_loop` state rule
+  (priorities are recomputed, never stored).
 
 Semantics: undirected simple projection of ``edges(src, dst)`` —
 parallel edges collapse, self-loops are ignored (the repo-wide
@@ -45,32 +45,61 @@ oracle recomputing the same md5 priorities).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cminer_spark.operators.graph import _und_sym
-from cminer_spark.plans.checkpoint import SuperstepCheckpoint, truncate_lineage
-from cminer_spark.plans.loopconf import superstep_conf
+from cminer_spark.operators.graph import undirected_adjacency
+from cminer_spark.plans.checkpoint import SuperstepCheckpoint
+from cminer_spark.plans.loop import LoopInfo, superstep_loop
 
-__all__ = ["maximal_independent_set", "MISInfo"]
+__all__ = ["maximal_independent_set"]
 
 UNDECIDED = "undecided"
 IN_SET = "in"
 OUT = "out"
 
 
-@dataclass
-class MISInfo:
-    rounds: int = 0
-    converged: bool = False
-    undecided: list = field(default_factory=list)
-    resumed_from: int | None = None
-
-
 def _pri(col):
     return F.md5(F.col(col).cast("string"))
+
+
+def _luby_round(sym: DataFrame, st: DataFrame) -> DataFrame:
+    """One Luby round over ``sym(v, nbr)`` and ``st(v_id, status)``."""
+    und = st.where(F.col("status") == UNDECIDED)
+    act = sym.join(
+        und.select(F.col("v_id").alias("nbr"), _pri("v_id").alias("pu")).hint(
+            "shuffle_hash"
+        ),
+        "nbr",
+    ).join(und.select(F.col("v_id").alias("v")).hint("shuffle_hash"), "v")
+    mn = act.groupBy(F.col("v").alias("v_id")).agg(F.min("pu").alias("mp"))
+    scored = st.join(mn.hint("shuffle_hash"), "v_id", "left")
+    is_winner = (F.col("status") == UNDECIDED) & (
+        F.col("mp").isNull() | (_pri("v_id") < F.col("mp"))
+    )
+    winners = scored.where(is_winner).select("v_id")
+    outs = (
+        sym.join(
+            winners.select(F.col("v_id").alias("nbr")).hint("shuffle_hash"),
+            "nbr",
+        )
+        .select(F.col("v").alias("v_id"))
+        .distinct()
+    )
+    return scored.join(
+        outs.select("v_id", F.lit(1).alias("is_out")).hint("shuffle_hash"),
+        "v_id",
+        "left",
+    ).select(
+        "v_id",
+        F.when(is_winner, F.lit(IN_SET))
+        .when(
+            (F.col("status") == UNDECIDED) & F.col("is_out").isNotNull(),
+            F.lit(OUT),
+        )
+        .otherwise(F.col("status"))
+        .alias("status"),
+    )
 
 
 def maximal_independent_set(
@@ -79,117 +108,40 @@ def maximal_independent_set(
     vertices: DataFrame | None = None,
     checkpoint: SuperstepCheckpoint | None = None,
     stop_when_done: bool = True,
-) -> tuple[DataFrame, MISInfo]:
+) -> tuple[DataFrame, LoopInfo]:
     """Luby MIS over the undirected simple projection of
     ``edges(src, dst)``.
 
     Returns ``(df(v_id, status), info)`` with ``status`` one of
     ``'in' | 'out' | 'undecided'`` — after convergence (no vertex
     undecided) the ``'in'`` rows are a maximal independent set.
+    ``info.history`` is the undecided count after each round.
     ``stop_when_done=False`` runs exactly ``max_rounds`` rounds (the
     fixed-depth gate variant).
     """
-    info = MISInfo()
-
-    sym = _und_sym(edges).persist()
+    sym = undirected_adjacency(edges).persist()
 
     all_v = edges.select(F.col("src").alias("v_id")).union(
         edges.select(F.col("dst").alias("v_id"))
     )
     if vertices is not None:
         all_v = all_v.union(vertices.select("v_id"))
-    all_v = all_v.distinct()
+    st0 = all_v.distinct().select("v_id", F.lit(UNDECIDED).alias("status"))
 
-    st = all_v.select("v_id", F.lit(UNDECIDED).alias("status"))
-
-    start_round = 0
-    if checkpoint is not None:
-        resume = checkpoint.latest()
-        if resume is not None:
-            # statuses are monotone (undecided→in/out, never back), so
-            # resuming AT a round replays it idempotently — identical
-            # output to the uninterrupted run
-            start_round, st, _ = resume
-            info.resumed_from = start_round
-    st = truncate_lineage(st)
-    n_sym = sym.count()
-
-    # Loop-scoped config (plans/loopconf.py): shuffle partitions sized
-    # to the symmetric adjacency, AQE off — one scheduler job per round.
-    with superstep_conf(edges.sparkSession, n_sym):
-        for rnd in range(start_round + 1, max_rounds + 1):
-            und = st.where(F.col("status") == UNDECIDED)
-            act = sym.join(
-                und.select(
-                    F.col("v_id").alias("nbr"), _pri("v_id").alias("pu")
-                ).hint("shuffle_hash"),
-                "nbr",
-            ).join(
-                und.select(F.col("v_id").alias("v")).hint("shuffle_hash"), "v"
-            )
-            mn = act.groupBy(F.col("v").alias("v_id")).agg(F.min("pu").alias("mp"))
-            scored = st.join(mn.hint("shuffle_hash"), "v_id", "left")
-            is_winner = (F.col("status") == UNDECIDED) & (
-                F.col("mp").isNull() | (_pri("v_id") < F.col("mp"))
-            )
-            winners = scored.where(is_winner).select("v_id")
-            outs = (
-                sym.join(
-                    winners.select(F.col("v_id").alias("nbr")).hint(
-                        "shuffle_hash"
-                    ),
-                    "nbr",
-                )
-                .select(F.col("v").alias("v_id"))
-                .distinct()
-            )
-            new_st = (
-                scored.join(
-                    outs.select("v_id", F.lit(1).alias("is_out")).hint(
-                        "shuffle_hash"
-                    ),
-                    "v_id",
-                    "left",
-                )
-                .select(
-                    "v_id",
-                    F.when(is_winner, F.lit(IN_SET))
-                    .when(
-                        (F.col("status") == UNDECIDED)
-                        & F.col("is_out").isNotNull(),
-                        F.lit(OUT),
-                    )
-                    .otherwise(F.col("status"))
-                    .alias("status"),
-                )
-            )
-
-            obs = None
-            to_save = new_st
-            if stop_when_done:
-                from pyspark.sql import Observation
-
-                obs = Observation(f"mis_und_{rnd}")
-                to_save = new_st.observe(
-                    obs,
-                    F.sum(
-                        (F.col("status") == UNDECIDED).cast("long")
-                    ).alias("und"),
-                )
-
-            st = (
-                checkpoint.save(rnd, to_save, {"round": rnd})
-                if checkpoint is not None
-                else truncate_lineage(to_save)
-            )
-            undecided = int(obs.get["und"] or 0) if obs is not None else -1
-            if checkpoint is not None:
-                checkpoint.update_metrics(rnd, {"undecided": undecided})
-            info.rounds = rnd
-            info.undecided.append(undecided)
-            if undecided == 0:
-                info.converged = True
-                break
-
+    # statuses are monotone (undecided→in/out, never back), so a resumed
+    # run replays the uninterrupted one exactly
+    st, info = superstep_loop(
+        st0,
+        lambda st, _rnd: _luby_round(sym, st),
+        n_rows=sym.count(),
+        max_rounds=max_rounds,
+        stop=(
+            F.sum((F.col("status") == UNDECIDED).cast("long"))
+            if stop_when_done
+            else None
+        ),
+        checkpoint=checkpoint,
+        name="mis",
+    )
     sym.unpersist()
     return st, info

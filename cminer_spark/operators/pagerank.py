@@ -68,7 +68,6 @@ def pagerank(
     checkpoint: SuperstepCheckpoint | None = None,
     salt_partitions: int | None = None,
     weight_col: str = "weight",
-    use_csr: bool = False,
     seeds: list | None = None,
     init_ranks: DataFrame | None = None,
 ) -> tuple[DataFrame, PageRankInfo]:
@@ -79,11 +78,6 @@ def pagerank(
     detected; 0/1 = off; k>1 = two-stage salted aggregation.
     ``tol <= 0`` runs exactly ``max_iter`` supersteps with no
     convergence aggregate (fixed-k mode).
-    ``use_csr``: gather from row-per-source CSR adjacency blocks
-    (:func:`cminer_spark.operators.graph.csr_blocks` shape) — the rank
-    join probes |V| wide rows instead of |E| flat rows, the |E|-sized
-    explode happens map-side after the join. A/B timings live in
-    BENCH/BASELINE.md; the flat representation is the default.
     ``seeds``: PERSONALIZED PageRank (random walk with restart) — the
     reset vector is uniform over the given vertex ids instead of over
     all vertices. The conservation-invariant dangling trick is
@@ -115,8 +109,9 @@ def pagerank(
     # every superstep schedules one task per adjacency partition, so a
     # 60k-edge graph spread over 64 partitions pays 64 task launches
     # per superstep for sub-millisecond work each (measured ~6s/step
-    # fixed cost on the sf0.1 events graph). ~250k edges/partition
-    # keeps tasks meaningful; the cap at spark.sql.shuffle.partitions
+    # fixed cost on the sf0.1 events graph). ~32k edges/partition
+    # (loopconf.ROWS_PER_PARTITION) keeps tasks meaningful; the cap at
+    # spark.sql.shuffle.partitions
     # preserves the large-graph plan (66M edges still gets the full
     # 2×cores spread — the scaling campaign is unaffected).
     # superstep_conf additionally turns AQE off and sizes
@@ -146,7 +141,6 @@ def pagerank(
             vertices,
             checkpoint,
             salt_partitions,
-            use_csr,
             seeds,
             init_ranks,
             t_setup,
@@ -165,7 +159,6 @@ def _pagerank_run(
     vertices: DataFrame | None,
     checkpoint: SuperstepCheckpoint | None,
     salt_partitions: int | None,
-    use_csr: bool,
     seeds: list | None,
     init_ranks: DataFrame | None,
     t_setup: float,
@@ -188,18 +181,7 @@ def _pagerank_run(
         .withColumn("p", F.col("w") / out_w)
         .select("src", "dst", "p")
     )
-    if use_csr:
-        # CSR adjacency blocks (graph.csr_blocks shape): one row per
-        # source, neighbor list inline, range-partitioned by src
-        adj = (
-            norm.repartitionByRange(iter_parts, "src")
-            .sortWithinPartitions("src", "dst")
-            .groupBy("src")
-            .agg(F.collect_list(F.struct("dst", "p")).alias("adj"))
-            .persist()
-        )
-    else:
-        adj = norm.persist()
+    adj = norm.persist()
 
     verts = pairs.select(F.col("src").alias("v_id")).union(
         pairs.select(F.col("dst").alias("v_id"))
@@ -221,18 +203,11 @@ def _pagerank_run(
     # several equally-hot destinations has no RELATIVE hubs (max ≤
     # 4×p99) yet still needs its reducer keys bounded, so the
     # quantile-based graph.hub_vertices probe stays a standalone
-    # diagnostic rather than the gate here. In CSR mode the in-degrees
-    # come from exploding the persisted blocks, not from recomputing
-    # the normalization shuffle.
+    # diagnostic rather than the gate here.
     if salt_partitions is None:
         hot_bar = max(10 * info.n_edges // max(shuffle_parts, 1), 1000)
-        in_deg_src = (
-            adj.select(F.explode(F.col("adj.dst")).alias("dst"))
-            if use_csr
-            else adj
-        )
         max_in = (
-            in_deg_src.groupBy("dst").count().agg(F.max("count")).collect()[0][0]
+            adj.groupBy("dst").count().agg(F.max("count")).collect()[0][0]
         )
         salt_partitions = 16 if (max_in or 0) > hot_bar else 1
     info.salted = salt_partitions > 1
@@ -364,18 +339,9 @@ def _pagerank_run(
                 "src",
             )
             salt_cols = ["salt"] if info.salted else []
-            if use_csr:
-                contribs = joined.select(
-                    *salt_cols, F.col("rank"), F.explode("adj").alias("a")
-                ).select(
-                    *salt_cols,
-                    F.col("a.dst").alias("dst"),
-                    (F.col("a.p") * F.col("rank")).alias("m"),
-                )
-            else:
-                contribs = joined.select(
-                    *salt_cols, "dst", (F.col("p") * F.col("rank")).alias("m")
-                )
+            contribs = joined.select(
+                *salt_cols, "dst", (F.col("p") * F.col("rank")).alias("m")
+            )
             if info.salted:
                 sums = (
                     contribs.groupBy("dst", "salt")
@@ -421,20 +387,9 @@ def _pagerank_run(
             "src",
         )
         salt_cols = ["salt"] if info.salted else []
-        if use_csr:
-            # |V|-row join above; the |E|-sized scatter is a map-side
-            # explode after it
-            contribs = joined.select(
-                *salt_cols, F.col("rank"), F.explode("adj").alias("a")
-            ).select(
-                *salt_cols,
-                F.col("a.dst").alias("dst"),
-                (F.col("a.p") * F.col("rank")).alias("m"),
-            )
-        else:
-            contribs = joined.select(
-                *salt_cols, "dst", (F.col("p") * F.col("rank")).alias("m")
-            )
+        contribs = joined.select(
+            *salt_cols, "dst", (F.col("p") * F.col("rank")).alias("m")
+        )
         if info.salted:
             sums = (
                 contribs.groupBy("dst", "salt")

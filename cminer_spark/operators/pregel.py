@@ -1,9 +1,9 @@
 """Generic vertex-centric superstep API (Pregel-style).
 
-Every iterative graph operator in this repo — PageRank, CC, LPA,
-HITS, Katz, k-core, ANF, coloring, MIS, Borůvka — is the same loop:
+Most iterative graph operators in this repo — PageRank, CC, LPA,
+HITS, Katz, k-core, ANF, coloring, MIS, Borůvka — are the same loop:
 join state to edges, aggregate messages by destination, update state,
-observe a convergence scalar, double-buffer the state. This module
+observe a convergence scalar, materialize the state. This module
 exposes that loop as a PUBLIC operator so users can run vertex
 programs the specialized operators don't ship, without touching the
 machinery (reference has nothing comparable — its engine is a
@@ -19,9 +19,8 @@ end, and the same scale design as the built-in operators:
   hinted — the state side is a parquet scan with unknown stats and
   Catalyst would otherwise sort-merge and re-sort the adjacency every
   superstep), one for the destination aggregate, one state join;
-* state rides the :class:`~cminer_spark.plans.checkpoint.
-  EphemeralStateStore` parquet double-buffer (flat plans, bounded
-  storage) or a durable
+* rounds run on :func:`~cminer_spark.plans.loop.superstep_loop`:
+  loop-scoped conf, lineage cut per round, or a durable
   :class:`~cminer_spark.plans.checkpoint.SuperstepCheckpoint` with
   per-partition lineage + exact resume;
 * the ``stop`` aggregate rides the state write via ``Observation`` —
@@ -45,25 +44,14 @@ Vocabulary inside the hooks:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cminer_spark.plans.checkpoint import (
-    EphemeralStateStore,
-    SuperstepCheckpoint,
-    truncate_lineage,
-)
+from cminer_spark.operators.graph import undirected_adjacency
+from cminer_spark.plans.checkpoint import SuperstepCheckpoint
+from cminer_spark.plans.loop import LoopInfo, superstep_loop
 
-__all__ = ["pregel", "pregel_components", "PregelInfo"]
-
-
-@dataclass
-class PregelInfo:
-    supersteps: int = 0
-    converged: bool = False
-    resumed_from: int | None = None
+__all__ = ["pregel", "pregel_components"]
 
 
 def pregel(
@@ -76,7 +64,7 @@ def pregel(
     stop: Column | None = None,
     checkpoint: SuperstepCheckpoint | None = None,
     name: str = "pregel",
-) -> tuple[DataFrame, PregelInfo]:
+) -> tuple[DataFrame, LoopInfo]:
     """Run a vertex program; returns ``(state, info)``.
 
     ``edges(src, dst, ...)`` — messages flow src → dst exactly as
@@ -100,92 +88,49 @@ def pregel(
     if clash:
         raise ValueError(f"aggregate aliases collide with state: {clash}")
 
-    info = PregelInfo()
-    spark = initial_state.sparkSession
+    def superstep(state: DataFrame, _rnd: int) -> DataFrame:
+        src_state = state.select(
+            F.col("v_id").alias("src"),
+            *[F.col(c).alias(f"src_{c}") for c in state_cols],
+        )
+        msgs = edges.join(src_state.hint("shuffle_hash"), "src").select(
+            F.col("dst").alias("v_id"),
+            *[e.alias(a) for a, e in messages.items()],
+        )
+        agg = msgs.groupBy("v_id").agg(
+            *[e.alias(a) for a, e in aggregates.items()]
+        )
+        return state.join(agg.hint("shuffle_hash"), "v_id", "left").select(
+            "v_id",
+            *[update[c].alias(c) for c in state_cols],
+            *[F.col(c).alias(f"prev_{c}") for c in state_cols],
+        )
+
     edges = edges.persist()
-    store = EphemeralStateStore(spark, name)
     try:
-        state = initial_state
-        start = 0
-        if checkpoint is not None:
-            resume = checkpoint.latest()
-            if resume is not None:
-                start, state, _ = resume
-                info.resumed_from = start
-        state = truncate_lineage(state)
-
-        for step in range(start + 1, max_supersteps + 1):
-            src_state = state.select(
-                F.col("v_id").alias("src"),
-                *[F.col(c).alias(f"src_{c}") for c in state_cols],
-            )
-            msgs = edges.join(src_state.hint("shuffle_hash"), "src").select(
-                F.col("dst").alias("v_id"),
-                *[e.alias(a) for a, e in messages.items()],
-            )
-            agg = msgs.groupBy("v_id").agg(
-                *[e.alias(a) for a, e in aggregates.items()]
-            )
-            sel = [F.col("v_id")]
-            sel += [update[c].alias(c) for c in state_cols]
-            sel += [F.col(c).alias(f"prev_{c}") for c in state_cols]
-            new_state = state.join(
-                agg.hint("shuffle_hash"), "v_id", "left"
-            ).select(*sel)
-
-            obs = None
-            to_save = new_state.select("v_id", *state_cols)
-            if stop is not None:
-                from pyspark.sql import Observation
-
-                obs = Observation(f"{name}_stop_{step}")
-                to_save = new_state.observe(obs, stop.alias("s")).select(
-                    "v_id", *state_cols
-                )
-            state = (
-                checkpoint.save(step, to_save, {"superstep": step})
-                if checkpoint is not None
-                else store.save(to_save, step)
-            )
-            info.supersteps = step
-            if obs is not None:
-                val = obs.get["s"]
-                if checkpoint is not None:
-                    checkpoint.update_metrics(step, {"stop": val})
-                if not val:
-                    info.converged = True
-                    break
-        # Detach the result from the ephemeral store before deleting
-        # it (same pattern as pagerank) — the returned frame must
-        # outlive the store's temp directory.
-        if checkpoint is None and info.supersteps > start:
-            state = truncate_lineage(state)
-        return state, info
+        return superstep_loop(
+            initial_state.select("v_id", *state_cols),
+            superstep,
+            n_rows=edges.count(),
+            max_rounds=max_supersteps,
+            stop=stop,
+            checkpoint=checkpoint,
+            name=name,
+        )
     finally:
-        store.close()
         edges.unpersist()
 
 
-def pregel_components(
+def _hashmin(
     edges: DataFrame,
     rounds: int,
-    vertices: DataFrame | None = None,
-    stop_when_stable: bool = False,
-) -> DataFrame:
-    """Hash-min connected components expressed AS a vertex program —
-    the differential twin of
-    :func:`~cminer_spark.operators.components.hashmin_components`
-    (same symmetrization, same update, bit-identical labels at every
-    round; parity-tested + gate-shared oracle)."""
-    sym = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .distinct()
-    )
-    sym = (
-        sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
+    vertices: DataFrame | None,
+    stop_when_stable: bool,
+) -> tuple[DataFrame, LoopInfo]:
+    """Hash-min CC as a vertex program; the stop is the changed-label
+    count."""
+    sym = undirected_adjacency(edges).select(
+        F.col("nbr").alias("src"), F.col("v").alias("dst")
     )
     all_v = edges.select(F.col("src").alias("v_id")).union(
         edges.select(F.col("dst").alias("v_id"))
@@ -195,7 +140,7 @@ def pregel_components(
     state0 = all_v.distinct().select(
         "v_id", F.col("v_id").alias("component")
     )
-    labels, _info = pregel(
+    return pregel(
         sym,
         state0,
         messages={"m": F.col("src_component")},
@@ -215,4 +160,17 @@ def pregel_components(
         ),
         name="pregel_cc",
     )
-    return labels
+
+
+def pregel_components(
+    edges: DataFrame,
+    rounds: int,
+    vertices: DataFrame | None = None,
+    stop_when_stable: bool = False,
+) -> DataFrame:
+    """Hash-min connected components expressed AS a vertex program —
+    the implementation behind
+    :func:`~cminer_spark.operators.components.hashmin_components`
+    (bit-identical labels at every round; parity-tested + gate-shared
+    oracle)."""
+    return _hashmin(edges, rounds, vertices, stop_when_stable)[0]

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cminer_spark.operators.graph import _und_sym
+from cminer_spark.operators.graph import undirected_adjacency
 from cminer_spark.plans.checkpoint import truncate_lineage
 
 __all__ = ["propagate_features"]
@@ -100,7 +100,7 @@ def propagate_features(
     # nothing actions this function's lazy return before the caller
     # does, so an unpersist-on-exit would drop the cache before first
     # use and every round would recompute the distinct shuffle.
-    sym = truncate_lineage(_und_sym(edges))
+    sym = truncate_lineage(undirected_adjacency(edges))
 
     st = features.select(
         "v_id", F.posexplode(feature_col).alias("pos", "val")

@@ -1,0 +1,111 @@
+"""One superstep driver for the vertex-state loops.
+
+LPA, MIS, greedy coloring, k-core, hash-min CC and the generic
+:func:`~cminer_spark.operators.pregel.pregel` are the same loop: build
+a new state frame from the old one, watch one convergence scalar,
+materialize the state so the next round's plan starts from a scan.
+:func:`superstep_loop` owns everything around the round body:
+
+* **resume** — with a durable checkpoint the loop restarts from
+  ``checkpoint.latest()``; when that committed round recorded a stop
+  value of 0 the state is a fixpoint and the loop returns at once,
+  running zero rounds;
+* **loop conf** — the rounds run under
+  :func:`~cminer_spark.plans.loopconf.superstep_conf` sized to
+  ``n_rows`` (AQE off, graph-sized shuffle partitions);
+* **stop** — the ``stop`` aggregate rides the state write as an
+  ``Observation``, so convergence costs no extra Spark job; the loop
+  stops when it reads 0 or NULL;
+* **state rule** — ephemeral runs cut lineage with
+  :func:`~cminer_spark.plans.checkpoint.truncate_lineage`
+  (``localCheckpoint``); durable runs ``checkpoint.save`` the round and
+  then commit the stop value into its metrics. Measured on a 24.5k-edge
+  transcript graph at ``local[4]`` (5-6 interleaved samples a side),
+  ``localCheckpoint`` beat the parquet double-buffer on every loop:
+  k-core 16 rounds 6.15 s vs 8.73 s, hash-min CC 10 rounds 3.87 s vs
+  4.66 s, LPA 10 rounds 3.85 s vs 5.05 s;
+* **record** — :class:`LoopInfo` holds the last round, whether the
+  stop fired, where the run resumed from and the per-round stop values.
+
+One round is one Spark job (the state write) in an ephemeral run. The
+round body ``step(state, rnd)`` returns the new state; it may carry
+extra columns (e.g. ``prev_<col>``) for ``stop`` to compare, and the
+driver keeps only the columns of ``state0``.
+"""
+
+from __future__ import annotations
+
+from dataclasses import dataclass, field
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Observation
+
+from cminer_spark.plans.checkpoint import SuperstepCheckpoint, truncate_lineage
+from cminer_spark.plans.loopconf import superstep_conf
+
+__all__ = ["superstep_loop", "LoopInfo"]
+
+
+@dataclass
+class LoopInfo:
+    rounds: int = 0
+    converged: bool = False
+    resumed_from: int | None = None
+    history: list = field(default_factory=list)
+
+    @property
+    def uncolored(self) -> list:
+        """Per-round uncolored counts of a coloring run (its ``history``)."""
+        return self.history
+
+
+def superstep_loop(
+    state0: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    *,
+    n_rows: int,
+    max_rounds: int,
+    stop: Column | None = None,
+    checkpoint: SuperstepCheckpoint | None = None,
+    name: str,
+) -> tuple[DataFrame, LoopInfo]:
+    """Run rounds ``1..max_rounds`` of ``step`` from ``state0``;
+    returns ``(state, info)``. ``n_rows`` sizes the loop conf (the
+    frame shuffled every round, usually the adjacency)."""
+    info = LoopInfo()
+    cols = state0.columns
+    state, start = state0, 0
+    if checkpoint is not None:
+        resume = checkpoint.latest()
+        if resume is not None:
+            start, state, meta = resume
+            info.resumed_from = info.rounds = start
+            if meta["metrics"].get("stop") == 0:
+                info.converged = True
+                return state, info
+    state = truncate_lineage(state)
+
+    with superstep_conf(state0.sparkSession, n_rows):
+        for rnd in range(start + 1, max_rounds + 1):
+            new = step(state, rnd)
+            obs = None
+            if stop is not None:
+                obs = Observation(f"{name}_stop_{rnd}")
+                new = new.observe(obs, stop.alias("stop"))
+            new = new.select(*cols)
+            state = (
+                checkpoint.save(rnd, new, {"round": rnd})
+                if checkpoint is not None
+                else truncate_lineage(new)
+            )
+            info.rounds = rnd
+            if obs is None:
+                continue
+            val = obs.get["stop"]
+            info.history.append(val)
+            if checkpoint is not None:
+                checkpoint.update_metrics(rnd, {"stop": val})
+            if not val:
+                info.converged = True
+                break
+    return state, info

@@ -15,15 +15,18 @@ queries are wrong inside such a loop:
   loop.  With AQE off a whole superstep is ONE scheduler job.
 * **``spark.sql.shuffle.partitions``** is sized for the session, not
   the graph.  Supersteps should shuffle into a partition count derived
-  from the input size (~250k rows/partition, capped at the session
-  setting) so a 100k-edge graph runs 1-partition shuffles while a
-  66M-edge graph keeps the full spread — the same rule at every scale,
-  never a constant tuned to the local core count.
+  from the input size (``ROWS_PER_PARTITION`` = 32k rows/partition,
+  capped at the session setting) so a 100k-edge graph runs 4-partition
+  shuffles while a 66M-edge graph keeps the full spread — the same
+  rule at every scale, never a constant tuned to the local core count.
 
 :func:`superstep_conf` applies both for the duration of the loop and
 restores the session values afterwards (the returned state frames are
-always materialized inside the loop — localCheckpoint or parquet
-store — so nothing downstream re-executes under the loop config).
+always materialized inside the loop — localCheckpoint, the parquet
+double-buffer or a durable checkpoint — so nothing downstream
+re-executes under the loop config).
+:func:`~cminer_spark.plans.loop.superstep_loop` enters it for every
+loop that runs on the driver.
 """
 
 from __future__ import annotations

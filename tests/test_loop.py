@@ -1,0 +1,135 @@
+"""The superstep driver's contract (plans/loop.py), checked through the
+six operators that run on it, on one tiny graph:
+
+(a) a run killed after round 1 and resumed equals a fresh run;
+(b) resuming at a committed fixpoint runs zero rounds;
+(c) every round costs exactly one Spark job.
+
+(a) and (b) cover the operators that take a checkpoint; coloring and
+hash-min CC take none, so they are checked on (c) only."""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.sql import functions as F
+
+from cminer_spark.operators import (
+    greedy_coloring,
+    hashmin_components,
+    label_propagation,
+    maximal_independent_set,
+    pregel,
+)
+from cminer_spark.operators.kcore import core_numbers
+from cminer_spark.plans import loop
+from cminer_spark.plans.checkpoint import SuperstepCheckpoint, truncate_lineage
+from cminer_spark.plans.loop import LoopInfo
+from tests.conftest import edges_df
+
+# two 4-cliques joined by a 3-edge path, plus a pendant tail
+PAIRS = (
+    [(a, b) for a in range(4) for b in range(a + 1, 4)]
+    + [(a, b) for a in range(7, 11) for b in range(a + 1, 11)]
+    + [(3, 4), (4, 5), (5, 6), (6, 7), (10, 11), (11, 12), (12, 13)]
+)
+
+
+def _min_label(df, rounds, ck):
+    """Hash-min CC through the generic pregel API, stopping when stable."""
+    sym = df.select("src", "dst").union(df.select("dst", "src"))
+    state0 = (
+        sym.select(F.col("src").alias("v_id"))
+        .distinct()
+        .select("v_id", F.col("v_id").alias("component"))
+    )
+    return pregel(
+        sym,
+        state0,
+        messages={"m": F.col("src_component")},
+        aggregates={"mn": F.min("m")},
+        update={
+            "component": F.least("component", F.coalesce("mn", "component"))
+        },
+        max_supersteps=rounds,
+        stop=F.sum((F.col("component") != F.col("prev_component")).cast("long")),
+        checkpoint=ck,
+    )
+
+
+# name -> (run(df, max_rounds, checkpoint) -> (frame, info), full budget)
+OPS = {
+    "lpa": (
+        lambda df, r, ck: label_propagation(df, max_rounds=r, checkpoint=ck),
+        20,
+    ),
+    "mis": (
+        lambda df, r, ck: maximal_independent_set(df, max_rounds=r, checkpoint=ck),
+        20,
+    ),
+    "kcore": (
+        lambda df, r, ck: core_numbers(df, max_rounds=r, checkpoint=ck),
+        20,
+    ),
+    "pregel": (_min_label, 20),
+    "coloring": (lambda df, r, ck: greedy_coloring(df, max_rounds=r), 20),
+    "hashmin": (
+        lambda df, r, ck: (hashmin_components(df, r), LoopInfo(rounds=r)),
+        4,
+    ),
+}
+RESUMABLE = {"lpa", "mis", "kcore", "pregel"}
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _round_jobs(spark, monkeypatch, op, fn):
+    """Run ``fn`` and count the Spark jobs of each round: every lineage
+    cut opens a new job group, so a round's group holds all the jobs
+    between the previous cut and its own."""
+    sc = spark.sparkContext
+    groups: list[str] = []
+
+    def cut(df):
+        out = truncate_lineage(df)
+        groups.append(f"loop-{op}-{len(groups) + 1}")
+        sc.setJobGroup(groups[-1], groups[-1])
+        return out
+
+    monkeypatch.setattr(loop, "truncate_lineage", cut)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    # the last group opens after the final round
+    return out, [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups[:-1]]
+
+
+@pytest.mark.parametrize("op", sorted(OPS))
+def test_superstep_loop_contract(spark, tmp_ckpt, monkeypatch, op):
+    run, full = OPS[op]
+    df = edges_df(spark, PAIRS)
+
+    (fresh, info), jobs = _round_jobs(
+        spark, monkeypatch, op, lambda: run(df, full, None)
+    )
+    assert info.rounds > 1
+    assert jobs == [1] * info.rounds  # (c)
+    if op not in RESUMABLE:
+        return
+    assert info.converged
+    monkeypatch.undo()
+
+    ck = SuperstepCheckpoint(spark, tmp_ckpt)
+    run(df, 1, ck)  # killed after round 1
+    resumed, rinfo = run(df, full, ck)
+    assert rinfo.resumed_from == 1 and rinfo.rounds == info.rounds
+    assert _rows(resumed) == _rows(fresh)  # (a)
+
+    committed = ck.committed_iterations()
+    again, ainfo = run(df, full, ck)
+    assert ainfo.converged and ainfo.rounds == rinfo.rounds  # (b)
+    assert ck.committed_iterations() == committed
+    assert _rows(again) == _rows(fresh)

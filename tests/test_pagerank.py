@@ -140,32 +140,6 @@ def test_resume_after_convergence_is_noop(spark, tmp_ckpt):
     assert g1 == g2
 
 
-def test_pagerank_csr_path_matches_flat(spark):
-    """use_csr=True (gather from CSR adjacency blocks) must produce
-    ranks allclose to the flat pair-adjacency path, salted and not."""
-    import random
-
-    rng = random.Random(12)
-    pairs = [(rng.randrange(50), rng.randrange(50)) for _ in range(260)]
-    pairs += [(i, 7) for i in range(50)]  # a hub to exercise salting
-    df = edges_df(spark, [p for p in pairs if p[0] != p[1]])
-    flat, fi = pagerank(df, tol=1e-9, max_iter=40)
-    csr, ci = pagerank(df, tol=1e-9, max_iter=40, use_csr=True)
-    g1 = {r.v_id: r.rank for r in flat.collect()}
-    g2 = {r.v_id: r.rank for r in csr.collect()}
-    assert g1.keys() == g2.keys()
-    a = np.array([g1[k] for k in sorted(g1)])
-    b = np.array([g2[k] for k in sorted(g2)])
-    assert np.allclose(a, b, atol=1e-12)
-    assert fi.n_edges == ci.n_edges
-    # forced salting on the csr path
-    csr_s, si = pagerank(df, tol=1e-9, max_iter=40, use_csr=True, salt_partitions=4)
-    assert si.salted
-    g3 = {r.v_id: r.rank for r in csr_s.collect()}
-    c = np.array([g3[k] for k in sorted(g3)])
-    assert np.allclose(a, c, atol=1e-12)
-
-
 def test_personalized_seeds_parity(spark):
     """Personalized PageRank (seeds reset vector) vs the numpy oracle:
     teleport AND dangling mass re-enter through the seed set only."""

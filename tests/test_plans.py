@@ -159,7 +159,7 @@ def test_propagation_round_uses_shuffle_hash(spark):
     Asserted on the raw round plan via _prop_round (the same
     pattern as the LPA plan test), independent of how many rounds the
     public wrapper chains."""
-    from cminer_spark.operators.graph import _und_sym
+    from cminer_spark.operators.graph import undirected_adjacency
     from cminer_spark.operators.propagation import _prop_round
 
     e = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
@@ -171,7 +171,7 @@ def test_propagation_round_uses_shuffle_hash(spark):
     st = f0.select(
         "v_id", F.posexplode("emb").alias("pos", "val")
     ).select("v_id", "pos", F.col("val").cast("double").alias("val"))
-    plan = _plan(_prop_round(_und_sym(e), st, alpha=0.5))
+    plan = _plan(_prop_round(undirected_adjacency(e), st, alpha=0.5))
     assert "ShuffledHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -191,7 +191,7 @@ def test_lpa_round_argmax_is_combinable_no_window(spark):
     e = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1)], "src long, dst long"
     )
-    sym = e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+    sym = e.select(F.col("src").alias("nbr"), F.col("dst").alias("v"))
     labels = e.select(
         F.col("src").alias("v_id"), F.col("src").alias("label")
     ).distinct()

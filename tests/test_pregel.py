@@ -9,12 +9,10 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from cminer_spark.operators.components import (
-    connected_components,
-    hashmin_components,
-)
+from cminer_spark.operators.components import connected_components
 from cminer_spark.operators.pregel import pregel, pregel_components
 from cminer_spark.plans.checkpoint import SuperstepCheckpoint
+from tests.oracles import hashmin_oracle
 
 
 def _edges(spark, pairs):
@@ -31,10 +29,11 @@ def _labels(df):
 
 
 def test_pregel_cc_matches_hashmin_every_round(spark):
-    df = _edges(spark, _rand_pairs(1, 60, 90))
+    pairs = _rand_pairs(1, 60, 90)
+    df = _edges(spark, pairs)
     for rounds in (1, 3, 8):
-        assert _labels(pregel_components(df, rounds)) == _labels(
-            hashmin_components(df, rounds)
+        assert _labels(pregel_components(df, rounds)) == set(
+            hashmin_oracle(pairs, rounds).items()
         )
 
 
@@ -71,7 +70,7 @@ def test_pregel_early_stop(spark):
             (F.col("component") != F.col("prev_component")).cast("long")
         ),
     )
-    assert info.converged and info.supersteps <= 7
+    assert info.converged and info.rounds <= 7
     assert {r.component for r in out.collect()} == {0}
 
 
@@ -96,7 +95,7 @@ def test_pregel_in_degree_program(spark):
         for r in df.groupBy("dst").agg(F.count("*").alias("cnt")).collect()
     }
     got = {r.v_id: r.deg for r in out.collect()}
-    assert info.supersteps == 1
+    assert info.rounds == 1
     for v, d in got.items():
         assert d == want.get(v, 0)
 

@@ -29,7 +29,7 @@ Measurement notes (hard-won):
 
 Usage:
   python tools/bench_scaling.py                 # orchestrate (writes BENCH/BASELINE.md)
-  python tools/bench_scaling.py --run-one CORES [--csr]  # single measured run (JSON line)
+  python tools/bench_scaling.py --run-one CORES  # single measured run (JSON line)
 """
 
 from __future__ import annotations
@@ -120,16 +120,14 @@ def materialize_input() -> None:
     spark.stop()
 
 
-def run_one(cores: int, use_csr: bool = False) -> None:
+def run_one(cores: int) -> None:
     from cminer_spark.operators import extract_edges, pagerank
 
     spark = _session("scaling-run", cores)
     edges = spark.read.parquet(f"{DATA_DIR}/edges").persist()
     n_edges = edges.count()
 
-    _ranks, info = pagerank(
-        edges, tol=TOL, max_iter=ITERS, salt_partitions=None, use_csr=use_csr
-    )
+    _ranks, info = pagerank(edges, tol=TOL, max_iter=ITERS, salt_partitions=None)
     # steady window from the RECORDED steps (a convergence-mode run
     # may stop before ITERS)
     steady = info.superstep_secs[len(info.superstep_secs) // 2 :]
@@ -183,7 +181,6 @@ def run_one(cores: int, use_csr: bool = False) -> None:
         json.dumps(
             {
                 "cores": cores,
-                "csr": use_csr,
                 "n_edges": n_edges,
                 "supersteps": info.iterations,
                 "superstep_secs": info.superstep_secs,
@@ -202,10 +199,8 @@ def run_one(cores: int, use_csr: bool = False) -> None:
     spark.stop()
 
 
-def _spawn(cores: int, csr: bool = False) -> dict:
+def _spawn(cores: int) -> dict:
     cmd = [sys.executable, __file__, "--run-one", str(cores)]
-    if csr:
-        cmd.append("--csr")
     out = subprocess.run(
         cmd, capture_output=True, text=True, check=True, cwd=str(REPO)
     )
@@ -251,10 +246,6 @@ def orchestrate() -> None:
     med_pair = min(pairs, key=lambda p: abs(p["eff"] - eff_med))
     lo, hi = med_pair["lo"], med_pair["hi"]
     speedup_pr = hi["edges_per_sec_per_superstep"] / lo["edges_per_sec_per_superstep"]
-
-    # CSR A/B at the high parallelism (one pair, informational)
-    flat32 = _spawn(hi_cores)
-    csr32 = _spawn(hi_cores, csr=True)
 
     pair_rows = "\n".join(
         "| {i} | {a:,.0f} | {b:,.0f} | {e:.3f} | {x:.3f} | {bx:.3f} |".format(
@@ -336,14 +327,6 @@ verified Exchange-free in tests/test_tables.py).
 | pair | local[{BASE_CORES}] e/s/step | local[{hi_cores}] e/s/step | efficiency | extract eff | extract bkt eff |
 |---|---|---|---|---|---|
 {pair_rows}
-
-## CSR adjacency A/B (local[{hi_cores}], informational)
-
-Flat pair adjacency: min steady superstep `{flat32['min_steady_sec']}s`
-({flat32['edges_per_sec_per_superstep']:,.0f} e/s/step); CSR blocks
-(`pagerank(use_csr=True)`): `{csr32['min_steady_sec']}s`
-({csr32['edges_per_sec_per_superstep']:,.0f} e/s/step). Raw:
-`{json.dumps(flat32)}` vs `{json.dumps(csr32)}`.
 
 ## Raw per-pair runs
 
@@ -596,7 +579,7 @@ Raw runs:
 
 if __name__ == "__main__":
     if len(sys.argv) > 2 and sys.argv[1] == "--run-one":
-        run_one(int(sys.argv[2]), use_csr="--csr" in sys.argv)
+        run_one(int(sys.argv[2]))
     elif len(sys.argv) > 2 and sys.argv[1] == "--extract-one":
         extract_one(int(sys.argv[2]))
     elif len(sys.argv) > 1 and sys.argv[1] == "--extract-campaign":
