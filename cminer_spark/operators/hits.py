@@ -258,7 +258,14 @@ def hits(
                     ).alias("d"),
                 ).select("v_id", "hub", "auth")
             if checkpoint is not None:
-                saved = checkpoint.save(it, to_save, {"tol": tol})
+                # the marker is written after the state write, which
+                # filled the L1 Observation: one commit per superstep
+                saved = checkpoint.save(
+                    it,
+                    to_save,
+                    lambda: {"tol": tol}
+                    | ({"l1_delta": float(obs.get["d"])} if obs else {}),
+                )
             else:
                 saved = store.save(to_save, it)
 
@@ -266,8 +273,6 @@ def hits(
             if check_convergence:
                 delta = float(obs.get["d"])
                 info.deltas.append(delta)
-                if checkpoint is not None:
-                    checkpoint.update_metrics(it, {"l1_delta": delta})
             araw.unpersist()
             auth.unpersist()
             hraw.unpersist()

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from cminer_spark.operators.graph import undirected_adjacency
 from cminer_spark.plans.checkpoint import SuperstepCheckpoint
 from cminer_spark.plans.loop import LoopInfo, superstep_loop
-from cminer_spark.plans.loopconf import iteration_partitions
+from cminer_spark.plans.loopconf import iteration_partitions, superstep_conf
 
 
 def _hindex_round(sym: DataFrame, state: DataFrame) -> DataFrame:
@@ -90,9 +90,12 @@ def core_numbers(
     rounds is a valid UPPER bound that the unrolled SQL gate
     mirrors)."""
     spark = edges.sparkSession
-    sym = undirected_adjacency(edges)
-    n_sym = sym.count()
-    sym = sym.repartition(iteration_partitions(spark, n_sym), "nbr").persist()
+    # The distinct pairs are built once: counted into a cache (AQE off,
+    # one job) that the nbr-partitioned copy is then read from.
+    und = undirected_adjacency(edges).persist()
+    with superstep_conf(spark, None):
+        n_sym = und.count()
+    sym = und.repartition(iteration_partitions(spark, n_sym), "nbr").persist()
 
     verts = sym.select(F.col("v").alias("v_id"))
     if vertices is not None:
@@ -111,6 +114,7 @@ def core_numbers(
         name="kcore",
     )
     sym.unpersist()
+    und.unpersist()
     return cores, info
 
 

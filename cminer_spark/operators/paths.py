@@ -149,14 +149,14 @@ def shortest_paths(
                 obs, F.sum(F.col("_imp").cast("long")).alias("imp")
             ).select("v_id", "dist", "_imp")
             if checkpoint is not None:
-                saved = checkpoint.save(rnd, to_save, {})
+                saved = checkpoint.save(
+                    rnd, to_save, lambda: {"improved": int(obs.get["imp"] or 0)}
+                )
             else:
                 saved = store.save(to_save, rnd)
             improved = int(obs.get["imp"] or 0)
             info.rounds = rnd
             info.improved.append(improved)
-            if checkpoint is not None:
-                checkpoint.update_metrics(rnd, {"improved": improved})
             state = saved.select("v_id", "dist")
             frontier = saved.where(F.col("_imp")).select("v_id", "dist")
             if improved == 0:

@@ -43,6 +43,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -88,7 +89,7 @@ class _HadoopIO:
         dst = self._Path(path)
         # Commit point. Preferred: FileContext.rename(OVERWRITE) — the
         # posix-rename analog (atomic replace, throws on failure), so
-        # overwriting an existing marker (update_metrics) has NO
+        # overwriting an existing marker (a re-run superstep) has NO
         # delete→rename window in which a crash would silently
         # un-commit an already-committed iteration. Only the FileContext
         # LOOKUP falls back (schemes without an AbstractFileSystem
@@ -156,9 +157,14 @@ class SuperstepCheckpoint:
         meta = json.loads(self.io.read_text(self._meta_path(i)))
         return i, self.spark.read.parquet(self._data_path(i)), meta
 
-    def save(self, i: int, df: DataFrame, metrics: dict) -> DataFrame:
+    def save(
+        self, i: int, df: DataFrame, metrics: dict | Callable[[], dict]
+    ) -> DataFrame:
         """Write superstep state + lineage, return the read-back frame
-        (lineage-truncated) for the next superstep."""
+        (lineage-truncated) for the next superstep. ``metrics`` may be
+        a zero-argument callable: it is resolved after the state write,
+        so it can read an ``Observation`` that rode the write (e.g. the
+        convergence delta), and the marker is written once, whole."""
         path = self._data_path(i)
         df.write.mode("overwrite").parquet(path)
         # explicit schema: skips the footer-sampling schema-inference
@@ -185,18 +191,10 @@ class SuperstepCheckpoint:
             "iteration": i,
             "rows": int(sum(p["rows"] for p in lineage)),
             "partitions": lineage,
-            "metrics": metrics,
+            "metrics": metrics() if callable(metrics) else metrics,
         }
         self.io.write_text_atomic(self._meta_path(i), json.dumps(meta))
         return back
-
-    def update_metrics(self, i: int, extra: dict) -> None:
-        """Merge extra metrics (e.g. the convergence delta computed
-        after the state write) into a committed superstep's meta."""
-        path = self._meta_path(i)
-        meta = json.loads(self.io.read_text(path))
-        meta["metrics"].update(extra)
-        self.io.write_text_atomic(path, json.dumps(meta))
 
     def clear(self) -> None:
         self.io.delete_recursive(self.dir)
@@ -220,11 +218,14 @@ class EphemeralStateStore:
     24.5k-edge transcript graph at ``local[4]`` (5-6 interleaved
     samples a side) ``localCheckpoint`` was faster on every loop tried
     — k-core 16 rounds 6.15 s vs 8.73 s, hash-min CC 10 rounds 3.87 s
-    vs 4.66 s, LPA 10 rounds 3.85 s vs 5.05 s — so the
-    :func:`~cminer_spark.plans.loop.superstep_loop` operators use
-    :func:`truncate_lineage`. PageRank, ANF, HITS, SSSP, Katz,
-    eigenvector, k-hop, funnel and BPE still use this store; each
-    needs its own measured port.
+    vs 4.66 s, LPA 10 rounds 3.85 s vs 5.05 s, fixed-k PageRank
+    (8 supersteps, the state rule swapped alone, 8 pairs) 3.47 s vs
+    5.11 s, convergence-mode PageRank (sf0.1 events graph, 5 samples
+    a side) 1.87 s vs 2.18 s — so the
+    :func:`~cminer_spark.plans.loop.superstep_loop` operators, star CC
+    and ephemeral PageRank use :func:`truncate_lineage`. ANF, HITS,
+    SSSP, Katz, eigenvector, k-hop, funnel and BPE still use this
+    store; each needs its own measured port.
     """
 
     def __init__(self, spark: SparkSession, tag: str = "state"):

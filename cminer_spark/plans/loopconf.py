@@ -66,16 +66,23 @@ def iteration_partitions(
 @contextmanager
 def superstep_conf(
     spark: SparkSession,
-    n_rows: int,
+    n_rows: int | None,
     rows_per_partition: int = ROWS_PER_PARTITION,
 ):
     """Context manager: loop-scoped shuffle sizing + AQE off.
 
     ``n_rows`` is the size of the frame the loop shuffles every round
     (edges for graph supersteps). Yields the partition count so the
-    operator can also use it for explicit repartitions.
+    operator can also use it for explicit repartitions. ``n_rows=None``
+    keeps the session's partition count and only turns AQE off: for a
+    set-up job that runs before the loop's size is known (it is then
+    one scheduler job instead of one per query stage).
     """
-    parts = iteration_partitions(spark, n_rows, rows_per_partition)
+    parts = (
+        int(spark.conf.get("spark.sql.shuffle.partitions"))
+        if n_rows is None
+        else iteration_partitions(spark, n_rows, rows_per_partition)
+    )
     saved: dict[str, str | None] = {}
     keys = ["spark.sql.shuffle.partitions", *_LOOP_CONF]
     for k in keys:

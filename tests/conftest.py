@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -40,3 +41,17 @@ def edges_df(spark, pairs, weight=1.0):
         (int(p[0]), int(p[1]), float(p[2]) if len(p) > 2 else weight) for p in pairs
     ]
     return spark.createDataFrame(rows, "src long, dst long, weight double")
+
+
+def count_jobs(spark, fn):
+    """Run ``fn`` under a job group of its own; returns ``(result,
+    number of Spark jobs it submitted)``."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -10,7 +10,7 @@ import networkx as nx
 from cminer_spark.operators import connected_components, hashmin_components
 from cminer_spark.plans import SuperstepCheckpoint
 
-from tests.conftest import edges_df
+from tests.conftest import count_jobs, edges_df
 from tests.oracles import hashmin_oracle
 
 
@@ -48,6 +48,19 @@ def test_two_cliques_with_bridge(spark):
     k2 = [(a, b) for a in range(10, 15) for b in range(a + 1, 15)]
     _check(spark, k1 + k2)  # two components
     _check(spark, k1 + k2 + [(4, 10)])  # bridged: one
+
+
+def test_star_cc_job_budget(spark):
+    """Star CC costs one job per round plus three: the initial cut
+    (two jobs under AQE), which carries the first fingerprint, and the
+    label cut, which carries the component count."""
+    pairs = [(1, 2), (2, 3), (3, 4), (4, 5), (7, 8), (8, 9)]
+    (labels, info), jobs = count_jobs(
+        spark, lambda: connected_components(edges_df(spark, pairs))
+    )
+    assert info.converged and info.n_components == 2
+    assert jobs == info.rounds + 3, (jobs, info.rounds)
+    assert _got_components(labels) == _nx_components(pairs)
 
 
 def test_chain_and_isolated(spark):

@@ -3,10 +3,12 @@ six operators that run on it, on one tiny graph:
 
 (a) a run killed after round 1 and resumed equals a fresh run;
 (b) resuming at a committed fixpoint runs zero rounds;
-(c) every round costs exactly one Spark job.
+(c) every round costs exactly one Spark job;
+(d) a durable round writes its commit marker once, and that marker
+    carries the round's stop value.
 
-(a) and (b) cover the operators that take a checkpoint; coloring and
-hash-min CC take none, so they are checked on (c) only."""
+(a), (b) and (d) cover the operators that take a checkpoint; coloring
+and hash-min CC take none, so they are checked on (c) only."""
 
 from __future__ import annotations
 
@@ -22,7 +24,11 @@ from cminer_spark.operators import (
 )
 from cminer_spark.operators.kcore import core_numbers
 from cminer_spark.plans import loop
-from cminer_spark.plans.checkpoint import SuperstepCheckpoint, truncate_lineage
+from cminer_spark.plans.checkpoint import (
+    SuperstepCheckpoint,
+    _HadoopIO,
+    truncate_lineage,
+)
 from cminer_spark.plans.loop import LoopInfo
 from tests.conftest import edges_df
 
@@ -122,11 +128,21 @@ def test_superstep_loop_contract(spark, tmp_ckpt, monkeypatch, op):
     assert info.converged
     monkeypatch.undo()
 
+    markers: list[str] = []
+    write = _HadoopIO.write_text_atomic
+
+    def counted(io, path, text):
+        markers.append(path)
+        return write(io, path, text)
+
+    monkeypatch.setattr(_HadoopIO, "write_text_atomic", counted)
     ck = SuperstepCheckpoint(spark, tmp_ckpt)
     run(df, 1, ck)  # killed after round 1
     resumed, rinfo = run(df, full, ck)
     assert rinfo.resumed_from == 1 and rinfo.rounds == info.rounds
     assert _rows(resumed) == _rows(fresh)  # (a)
+    assert len(markers) == len(set(markers)) == info.rounds  # (d)
+    assert ck.latest()[2]["metrics"] == {"round": info.rounds, "stop": 0}
 
     committed = ck.committed_iterations()
     again, ainfo = run(df, full, ck)

@@ -10,7 +10,7 @@ import pytest
 from cminer_spark.operators import pagerank
 from cminer_spark.plans import SuperstepCheckpoint
 
-from tests.conftest import edges_df
+from tests.conftest import count_jobs, edges_df
 from tests.oracles import pagerank_oracle
 
 
@@ -48,6 +48,30 @@ def test_directed_cycle_uniform(spark):
     assert len(vals) == n
     assert np.allclose(vals, 1.0 / n, atol=1e-9)
     assert info.converged
+
+
+def test_fixed_k_parity_and_job_budget(spark):
+    """tol=0 runs exactly k supersteps (the k-step power iteration,
+    dangling and isolated vertices included) for at most k + 3 Spark
+    jobs: the edge count, one set-up probe, one job per superstep,
+    and one more only when the adjacency is salted."""
+    k = 5
+    pairs = [(i, (i + 1) % 6) for i in range(6)] + [(0, 3), (2, 7), (7, 8)]
+    df = edges_df(spark, pairs)
+    vdf = spark.createDataFrame([(9,)], "v_id long")
+    (ranks, info), jobs = count_jobs(
+        spark, lambda: pagerank(df, tol=0.0, max_iter=k, vertices=vdf)
+    )
+    assert info.iterations == k and len(info.superstep_secs) == k
+    assert jobs <= k + 3, jobs
+    got = {r.v_id: r.rank for r in ranks.collect()}
+    want = pagerank_oracle(
+        [(s, d, 1.0) for s, d in pairs], vertices=[9], tol=0.0, max_iter=k
+    )
+    assert set(got) == set(want)
+    a = np.array([got[v] for v in sorted(got)])
+    b = np.array([want[v] for v in sorted(want)])
+    assert np.allclose(a, b, atol=1e-12), np.abs(a - b).max()
 
 
 def test_star_hub(spark):
