@@ -154,6 +154,42 @@ def e_greedy_color_events(ctx):
     return run
 
 
+def _vertex_ids_df(ctx, rows):
+    """A ``(v_id)`` frame of the collected ``rows``, built once so the
+    timed calls run no seed-selection jobs."""
+    return ctx.spark.createDataFrame([(int(r[0]),) for r in rows], "v_id long")
+
+
+def e_sssp_events(ctx):
+    from cminer_spark.operators.paths import shortest_paths
+
+    e = ctx.edges
+    ids = e.select(F.col("src").alias("v")).union(e.select("dst")).distinct()
+    seeds = _vertex_ids_df(ctx, ids.orderBy("v").limit(2).collect())
+
+    def run():
+        dists, info = shortest_paths(e, seeds, directed=False)
+        dists.count()
+        return info.rounds
+
+    return run
+
+
+def e_closeness_landmarks_events(ctx):
+    from cminer_spark.operators.paths import harmonic_closeness
+
+    e = ctx.edges
+    hubs = e.where(F.col("type") == "invokes").select("dst").distinct()
+    landmarks = _vertex_ids_df(ctx, hubs.collect())
+
+    def run():
+        cl, info = harmonic_closeness(e, landmarks, directed=False)
+        cl.count()
+        return info.rounds
+
+    return run
+
+
 def e_feature_prop_events(ctx):
     from cminer_spark.operators import propagate_features
 

@@ -132,42 +132,13 @@ def k_hop_neighborhood(
     edges: DataFrame, seeds: DataFrame, k: int, directed: bool = False
 ) -> DataFrame:
     """G2 (reference BFS connected subgraph, ``Graph.py:184-210``):
-    vertices within k hops of the seed set — iterative frontier
-    semi-joins, the same superstep skeleton as connected components."""
-    sym = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    if not directed:
-        sym = sym.union(
-            edges.select(F.col("dst").alias("u"), F.col("src").alias("v"))
-        )
-    from cminer_spark.plans.checkpoint import EphemeralStateStore
+    vertices within k hops of the seed set — unweighted
+    :func:`~cminer_spark.operators.paths.shortest_paths` cut at k
+    rounds (it stops early once the frontier empties)."""
+    from cminer_spark.operators.paths import shortest_paths
 
-    sym = sym.distinct().persist()
-    # Per-hop state rides the parquet double-buffer: eager
-    # localCheckpoint blocks accumulate across supersteps and degrade
-    # sharply past ~20 iterations, which a deep BFS (k near the graph
-    # diameter) would hit. Frontier and visited are saved separately
-    # (even/odd slots) so each hop's plan is rooted at two flat scans.
-    store = EphemeralStateStore(edges.sparkSession, "khop")
-    try:
-        visited = seeds.select("v_id").distinct()
-        frontier = visited
-        for hop in range(k):
-            nxt = (
-                sym.join(
-                    frontier.withColumnRenamed("v_id", "u"), "u", "left_semi"
-                )
-                .select(F.col("v").alias("v_id"))
-                .distinct()
-                .join(visited, "v_id", "left_anti")
-            )
-            frontier = store.save(nxt, 2 * hop)
-            if frontier.count() == 0:
-                break
-            visited = store.save(visited.union(frontier), 2 * hop + 1)
-        return visited.localCheckpoint(eager=True)
-    finally:
-        store.close()
-        sym.unpersist()
+    dists, _info = shortest_paths(edges, seeds, directed=directed, max_rounds=k)
+    return dists.select("v_id")
 
 
 def label_catalog(vertices: DataFrame) -> DataFrame:

@@ -116,34 +116,37 @@ def hits(
     pairs = edges.select("src", "dst", w.alias("w"))
     n_raw = pairs.count()
     info.n_edges = n_raw
-    iter_parts = min(shuffle_parts, max(1, -(-n_raw // 250_000)))
 
     # Two persisted copies of the adjacency, each pre-partitioned on
-    # the key its half-step joins on — the graph is never re-shuffled
-    # inside the loop (2·|E| storage, |V|-sized per-superstep traffic).
-    if _salsa:
-        outw = pairs.groupBy("src").agg(F.sum("w").alias("ow"))
-        inw = pairs.groupBy("dst").agg(F.sum("w").alias("iw"))
-        fwd = pairs.join(outw, "src").select(
-            "src", "dst", (F.col("w") / F.col("ow")).alias("w")
-        )
-        bwd = pairs.join(inw, "dst").select(
-            "src", "dst", (F.col("w") / F.col("iw")).alias("w")
-        )
-        adj_src = fwd.repartition(iter_parts, "src").persist()
-        adj_dst = bwd.repartition(iter_parts, "dst").persist()
-    else:
-        adj_src = pairs.repartition(iter_parts, "src").persist()
-        adj_dst = pairs.repartition(iter_parts, "dst").persist()
+    # the key its half-step joins on, and the vertex set the score
+    # vectors are built from, all cached under the loop conf: at its
+    # partition count and without AQE, so no superstep ever shuffles
+    # the |E|-sized graph, only the |V|-sized score vectors (2·|E|
+    # storage).
+    with superstep_conf(spark, n_raw) as iter_parts:
+        if _salsa:
+            outw = pairs.groupBy("src").agg(F.sum("w").alias("ow"))
+            inw = pairs.groupBy("dst").agg(F.sum("w").alias("iw"))
+            fwd = pairs.join(outw, "src").select(
+                "src", "dst", (F.col("w") / F.col("ow")).alias("w")
+            )
+            bwd = pairs.join(inw, "dst").select(
+                "src", "dst", (F.col("w") / F.col("iw")).alias("w")
+            )
+            adj_src = fwd.repartition(iter_parts, "src").persist()
+            adj_dst = bwd.repartition(iter_parts, "dst").persist()
+        else:
+            adj_src = pairs.repartition(iter_parts, "src").persist()
+            adj_dst = pairs.repartition(iter_parts, "dst").persist()
 
-    verts = (
-        pairs.select(F.col("src").alias("v_id"))
-        .union(pairs.select(F.col("dst").alias("v_id")))
-    )
-    if vertices is not None:
-        verts = verts.union(vertices.select("v_id"))
-    verts = verts.distinct().persist()
-    n = verts.count()
+        verts = (
+            pairs.select(F.col("src").alias("v_id"))
+            .union(pairs.select(F.col("dst").alias("v_id")))
+        )
+        if vertices is not None:
+            verts = verts.union(vertices.select("v_id"))
+        verts = verts.distinct().persist()
+        n = verts.count()
     info.n_vertices = n
     if n == 0 or n_raw == 0:
         out = verts.select(

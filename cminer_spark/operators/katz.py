@@ -17,9 +17,10 @@ is no dangling/teleport mass to conserve):
   aggregate is map-side partial — hub vertices (tool nodes with 10⁷
   in-edges) combine locally before the exchange, so in-degree skew
   needs no salting here;
-* state rides the :class:`EphemeralStateStore` parquet double-buffer
-  (``localCheckpoint`` blocks accumulate and measurably degrade
-  supersteps — see the store's docstring); the L1 convergence probe
+* state rides the :class:`EphemeralStateStore` parquet double-buffer.
+  Katz has not been measured against ``localCheckpoint``, which beat
+  the store on every loop measured so far (see the store's
+  docstring); a port needs its own A/B. The L1 convergence probe
   rides the state write via ``observe`` — one job per superstep, no
   separate aggregate action.
 """

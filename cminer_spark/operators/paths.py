@@ -5,22 +5,26 @@ weight column it is the classic label-correcting relaxation
 (``double`` distances, non-negative weights assumed for the
 convergence bound to be the longest shortest path).
 
-Scale design (the same superstep discipline as
-:mod:`cminer_spark.operators.pagerank`):
+:func:`shortest_paths`, :func:`landmark_distances` and
+:func:`~cminer_spark.operators.graph.k_hop_neighborhood` are one
+relaxation, :func:`_relax`, run on
+:func:`~cminer_spark.plans.loop.superstep_loop` (resume, loop conf,
+``Observation`` stop, ``localCheckpoint`` state cut):
 
 * the adjacency collapses parallel edges to their min weight once,
-  is hash-partitioned on the relax key and persisted; every round
-  shuffles only the FRONTIER (vertices whose distance improved last
-  round), not the full state — frontier relaxation provably yields
-  the same state as whole-graph relaxation for monotone min-plus, so
-  the k-round prefix is still "min over ≤k-edge paths" (which is what
-  the unrolled SQL gate mirrors);
-* the improved-vertex count rides the state write via
-  ``df.observe()`` — one Spark job per round;
-* state holds REACHED vertices only (sparse): on a 100 TB graph with
-  a small seed set the early rounds touch a tiny fraction of |V|;
-* lineage per round is cut by :class:`SuperstepCheckpoint` (durable,
-  resumable) or the parquet double-buffer.
+  is hash-partitioned on the relax key at the loop's own partition
+  count and persisted, so every round shuffles only the FRONTIER
+  (vertices whose distance improved last round), never the graph —
+  frontier relaxation provably yields the same state as whole-graph
+  relaxation for monotone min-plus, so the k-round prefix is still
+  "min over ≤k-edge paths" (which is what the unrolled SQL gate
+  mirrors);
+* the state is the reached ``(*keys, dist, _imp)`` (sparse: on a
+  100 TB graph with a small seed set the early rounds touch a tiny
+  fraction of |V|); ``_imp`` marks the frontier, so a durable run
+  resumes with the exact frontier;
+* the improved count ``sum(_imp)`` is the driver's stop — one Spark
+  job per round.
 
 The reference has no distance operator; its BFS neighborhood
 (``/root/reference/src/Graph/Graph.py:184-210``) is the reachability
@@ -30,26 +34,86 @@ k_hop_neighborhood`).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from cminer_spark.plans.checkpoint import (
-    EphemeralStateStore,
-    SuperstepCheckpoint,
-    truncate_lineage,
-)
-from cminer_spark.plans.loopconf import superstep_conf
+from cminer_spark.plans.checkpoint import SuperstepCheckpoint, truncate_lineage
+from cminer_spark.plans.loop import LoopInfo, superstep_loop
+from cminer_spark.plans.loopconf import iteration_partitions, superstep_conf
 
 
-@dataclass
-class PathInfo:
-    rounds: int = 0
-    converged: bool = False
-    improved: list = field(default_factory=list)
-    weighted: bool = False
-    resumed_from: int | None = None
+def _relax(
+    edges: DataFrame,
+    w: Column,
+    seeds: DataFrame,
+    keys: list[str],
+    *,
+    directed: bool,
+    max_rounds: int,
+    checkpoint: SuperstepCheckpoint | None = None,
+    name: str,
+) -> tuple[DataFrame, LoopInfo]:
+    """Min-plus frontier relaxation over ``edges(src, dst)`` weighted
+    by ``w`` (both ways unless ``directed``) from ``seeds``, a frame of
+    ``keys`` whose last key is the vertex ``v_id`` (the others tag
+    independent copies of the search). Returns the reached
+    ``(*keys, dist)`` and the driver's :class:`LoopInfo`, whose
+    ``history`` is the improved count per round. ``dist`` has the
+    type of ``w``."""
+    spark = edges.sparkSession
+    *tags, vk = keys
+    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"), w.alias("w"))
+    if not directed:
+        e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
+    # parallel edges: only the cheapest matters
+    adj = e.groupBy("u", "v").agg(F.min("w").alias("w"))
+    # AQE off for the set-up: the count is one job, and the cached
+    # adjacency's plan is built without AQE, so round 1 fills the
+    # cache inside its own single job
+    with superstep_conf(spark, None):
+        n_adj = adj.count()
+        adj = adj.repartition(iteration_partitions(spark, n_adj), "u").persist()
+
+    zero = F.lit(0).cast(e.schema["w"].dataType)
+    state0 = seeds.select(*keys).distinct().select(
+        *keys, zero.alias("dist"), F.lit(True).alias("_imp")
+    )
+
+    def step(state: DataFrame, _rnd: int) -> DataFrame:
+        frontier = state.where("_imp").select(
+            *tags, F.col(vk).alias("u"), F.col("dist").alias("du")
+        )
+        cand = (
+            adj.join(frontier.hint("shuffle_hash"), "u")
+            .groupBy(*tags, F.col("v").alias(vk))
+            .agg(F.min(F.col("du") + F.col("w")).alias("nd"))
+        )
+        return (
+            state.drop("_imp")
+            .join(cand.hint("shuffle_hash"), keys, "full_outer")
+            .select(
+                *keys,
+                F.least(
+                    F.coalesce("dist", "nd"), F.coalesce("nd", "dist")
+                ).alias("dist"),
+                (
+                    F.col("dist").isNull()
+                    | (F.col("nd").isNotNull() & (F.col("nd") < F.col("dist")))
+                ).alias("_imp"),
+            )
+        )
+
+    state, info = superstep_loop(
+        state0,
+        step,
+        n_rows=n_adj,
+        max_rounds=max_rounds,
+        stop=F.sum(F.col("_imp").cast("long")),
+        checkpoint=checkpoint,
+        name=name,
+    )
+    adj.unpersist()
+    return state.select(*keys, "dist"), info
 
 
 def shortest_paths(
@@ -59,7 +123,7 @@ def shortest_paths(
     directed: bool = True,
     max_rounds: int = 50,
     checkpoint: SuperstepCheckpoint | None = None,
-) -> tuple[DataFrame, PathInfo]:
+) -> tuple[DataFrame, LoopInfo]:
     """Distances from the nearest source. Returns
     ``(dists(v_id, dist), info)`` — reached vertices only; ``dist``
     is ``bigint`` hops when ``weight_col`` is None, else ``double``.
@@ -69,106 +133,21 @@ def shortest_paths(
     lower-bound-complete prefix the unrolled SQL gate mirrors;
     converged early stops are idempotent under extra rounds).
     """
-    spark = edges.sparkSession
-    info = PathInfo(weighted=weight_col is not None)
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    if weight_col is None:
-        e = edges.select(
-            F.col("src").alias("u"),
-            F.col("dst").alias("v"),
-            F.lit(1).cast("long").alias("w"),
-        )
-    else:
-        e = edges.select(
-            F.col("src").alias("u"),
-            F.col("dst").alias("v"),
-            F.col(weight_col).cast("double").alias("w"),
-        )
-    if not directed:
-        e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
-    # parallel edges: only the cheapest matters
-    adj = e.groupBy("u", "v").agg(F.min("w").alias("w"))
-    n_adj = adj.count()
-    iter_parts = min(shuffle_parts, max(1, -(-n_adj // 250_000)))
-    adj = adj.repartition(iter_parts, "u").persist()
-
-    zero = F.lit(0).cast("long" if weight_col is None else "double")
-    start_round = 0
-    state = sources.select("v_id").distinct().select("v_id", zero.alias("dist"))
-    frontier = state
-    if checkpoint is not None:
-        resume = checkpoint.latest()
-        if resume is not None:
-            start_round, state, _meta = resume
-            state = state.select("v_id", "dist")
-            info.resumed_from = start_round
-            if (_meta.get("metrics") or {}).get("improved") == 0:
-                info.rounds = start_round
-                info.converged = True
-                adj.unpersist()
-                return state, info
-            # resumed frontier = full state (a superset of the true
-            # frontier; one extra round of no-op relaxations, then the
-            # improved-count discipline takes over)
-            frontier = state
-    state = truncate_lineage(state)
-    frontier = truncate_lineage(frontier)
-    store = EphemeralStateStore(spark, "sssp") if checkpoint is None else None
-
-    # loop-scoped config (plans/loopconf.py): graph-sized shuffle
-    # partitions, AQE off — one scheduler job per relaxation round
-    with superstep_conf(spark, n_adj):
-        for rnd in range(start_round + 1, max_rounds + 1):
-            cand = (
-                adj.join(
-                    frontier.select(
-                        F.col("v_id").alias("u"), F.col("dist").alias("du")
-                    ).hint("shuffle_hash"),
-                    "u",
-                )
-                .select(F.col("v").alias("v_id"), (F.col("du") + F.col("w")).alias("nd"))
-                .groupBy("v_id")
-                .agg(F.min("nd").alias("nd"))
-            )
-            merged = (
-                state.join(cand.hint("shuffle_hash"), "v_id", "full_outer")
-                .select(
-                    "v_id",
-                    F.least(
-                        F.coalesce("dist", F.col("nd")), F.coalesce("nd", F.col("dist"))
-                    ).alias("dist"),
-                    (
-                        F.col("dist").isNull()
-                        | (F.col("nd").isNotNull() & (F.col("nd") < F.col("dist")))
-                    ).alias("_imp"),
-                )
-            )
-            obs = Observation(f"sssp_imp_{rnd}")
-            to_save = merged.observe(
-                obs, F.sum(F.col("_imp").cast("long")).alias("imp")
-            ).select("v_id", "dist", "_imp")
-            if checkpoint is not None:
-                saved = checkpoint.save(
-                    rnd, to_save, lambda: {"improved": int(obs.get["imp"] or 0)}
-                )
-            else:
-                saved = store.save(to_save, rnd)
-            improved = int(obs.get["imp"] or 0)
-            info.rounds = rnd
-            info.improved.append(improved)
-            state = saved.select("v_id", "dist")
-            frontier = saved.where(F.col("_imp")).select("v_id", "dist")
-            if improved == 0:
-                info.converged = True
-                break
-
-    adj.unpersist()
-    result = state.select("v_id", "dist")
-    if store is not None and info.rounds > start_round:
-        result = truncate_lineage(result)
-        store.close()
-    return result, info
+    w = (
+        F.lit(1).cast("long")
+        if weight_col is None
+        else F.col(weight_col).cast("double")
+    )
+    return _relax(
+        edges,
+        w,
+        sources,
+        ["v_id"],
+        directed=directed,
+        max_rounds=max_rounds,
+        checkpoint=checkpoint,
+        name="sssp",
+    )
 
 
 def landmark_distances(
@@ -176,16 +155,13 @@ def landmark_distances(
     landmarks: DataFrame,
     directed: bool = False,
     max_rounds: int = 50,
-) -> tuple[DataFrame, PathInfo]:
+) -> tuple[DataFrame, LoopInfo]:
     """Hop distances from EACH landmark: ``(lm, v_id, dist)`` for every
     reached (landmark, vertex) pair — the tagged multi-source BFS
     underneath landmark centrality estimates.
 
-    Same superstep discipline as :func:`shortest_paths`, with the
-    state keyed on the composite ``(lm, v_id)``: the adjacency is
-    partitioned once on the relax key and persisted; each round
-    shuffles only the frontier; the improved count rides the state
-    write via ``observe()`` (one job per round). State size is
+    The relaxation of :func:`shortest_paths` (unit weights) with the
+    state keyed on the composite ``(lm, v_id)``. State size is
     |landmarks| × |reached| — the landmark set is meant to be small
     (tens to hundreds), which is exactly the landmark-centrality
     trade-off: full closeness is |V| BFS runs, landmarks make it
@@ -194,88 +170,29 @@ def landmark_distances(
     With ``max_rounds=k`` and no convergence the result is exact over
     ≤k-edge paths (the unrolled SQL gate mirrors that prefix).
     """
-    spark = edges.sparkSession
-    info = PathInfo(weighted=False)
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    if not directed:
-        e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    adj = e.distinct()
-    n_adj = adj.count()
-    iter_parts = min(shuffle_parts, max(1, -(-n_adj // 250_000)))
-    adj = adj.repartition(iter_parts, "u").persist()
-
-    state = (
-        landmarks.select("v_id")
-        .distinct()
-        .select(
-            F.col("v_id").alias("lm"),
-            "v_id",
-            F.lit(0).cast("long").alias("dist"),
-        )
+    return _relax(
+        edges,
+        F.lit(1).cast("long"),
+        landmarks.select(F.col("v_id").alias("lm"), "v_id"),
+        ["lm", "v_id"],
+        directed=directed,
+        max_rounds=max_rounds,
+        name="landmark_bfs",
     )
-    frontier = truncate_lineage(state)
-    state = frontier
-    store = EphemeralStateStore(spark, "landmark_bfs")
-
-    for rnd in range(1, max_rounds + 1):
-        cand = (
-            adj.join(
-                frontier.select(
-                    "lm", F.col("v_id").alias("u"), F.col("dist").alias("du")
-                ).hint("shuffle_hash"),
-                "u",
-            )
-            .select("lm", F.col("v").alias("v_id"), (F.col("du") + 1).alias("nd"))
-            .groupBy("lm", "v_id")
-            .agg(F.min("nd").alias("nd"))
-        )
-        merged = state.join(cand.hint("shuffle_hash"), ["lm", "v_id"], "full_outer").select(
-            "lm",
-            "v_id",
-            F.least(
-                F.coalesce("dist", F.col("nd")), F.coalesce("nd", F.col("dist"))
-            ).alias("dist"),
-            (
-                F.col("dist").isNull()
-                | (F.col("nd").isNotNull() & (F.col("nd") < F.col("dist")))
-            ).alias("_imp"),
-        )
-        obs = Observation(f"lmbfs_imp_{rnd}")
-        to_save = merged.observe(
-            obs, F.sum(F.col("_imp").cast("long")).alias("imp")
-        ).select("lm", "v_id", "dist", "_imp")
-        saved = store.save(to_save, rnd)
-        improved = int(obs.get["imp"] or 0)
-        info.rounds = rnd
-        info.improved.append(improved)
-        state = saved.select("lm", "v_id", "dist")
-        frontier = saved.where(F.col("_imp")).select("lm", "v_id", "dist")
-        if improved == 0:
-            info.converged = True
-            break
-
-    adj.unpersist()
-    result = state
-    if info.rounds > 0:
-        result = truncate_lineage(result)
-        store.close()
-    return result, info
 
 
 def diameter_estimate(
     edges: DataFrame,
     directed: bool = False,
     max_rounds: int = 50,
-) -> tuple[DataFrame, PathInfo]:
+) -> tuple[DataFrame, LoopInfo]:
     """Double-sweep diameter lower bound (the standard 2-BFS
     heuristic, exact on trees): BFS from the minimum vertex id, take
     the farthest vertex (max dist, ties → min id), BFS again from it;
     the second eccentricity is the bound.
 
     Returns ``(df(start_v, peripheral_v, diameter_lb), info)`` — one
-    row; ``info`` is the second sweep's :class:`PathInfo`. With
+    row; ``info`` is the second sweep's :class:`LoopInfo`. With
     ``max_rounds=k`` and no convergence the bound is over ≤k-hop
     distances (truncation the SQL gate mirrors). Cost: exactly two
     multi-source BFS runs — nothing new to scale beyond
@@ -290,7 +207,7 @@ def diameter_estimate(
         empty = spark.createDataFrame(
             [], "start_v long, peripheral_v long, diameter_lb long"
         )
-        return empty, PathInfo(converged=True)
+        return empty, LoopInfo(converged=True)
     v0 = int(row.v0)
     d1, _ = shortest_paths(
         edges,
@@ -318,7 +235,7 @@ def landmark_betweenness(
     landmarks: DataFrame,
     directed: bool = False,
     max_rounds: int = 50,
-) -> tuple[DataFrame, PathInfo]:
+) -> tuple[DataFrame, LoopInfo]:
     """Landmark-approximated betweenness centrality (Brandes with a
     restricted source set): ``(v_id, betweenness)`` where
     ``betweenness(v) = Σ_{lm} δ_lm(v)`` and ``δ`` is Brandes'
@@ -345,9 +262,11 @@ def landmark_betweenness(
     Unweighted hop distances; ``max_rounds`` truncates the BFS (the
     result is then betweenness restricted to ≤max_rounds-hop shortest
     paths — the unrolled SQL gate mirrors the same truncation).
+    ``info.history`` holds the new (landmark, vertex) pairs per
+    forward level.
     """
     spark = edges.sparkSession
-    info = PathInfo(weighted=False)
+    info = LoopInfo()
     shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     e = edges.where(F.col("src") != F.col("dst")).select(
@@ -395,7 +314,7 @@ def landmark_betweenness(
         )
         n_new = int(obs.get["n"] or 0)
         info.rounds = rnd
-        info.improved.append(n_new)
+        info.history.append(n_new)
         if n_new == 0:
             info.converged = True
             break
@@ -476,7 +395,7 @@ def harmonic_closeness(
     landmarks: DataFrame,
     directed: bool = False,
     max_rounds: int = 50,
-) -> tuple[DataFrame, PathInfo]:
+) -> tuple[DataFrame, LoopInfo]:
     """Landmark harmonic centrality: for each vertex,
     ``closeness = Σ_{lm reached, lm≠v} 1/dist(lm, v)`` and
     ``n_reached`` the number of contributing landmarks.
@@ -488,7 +407,7 @@ def harmonic_closeness(
     vertices are well-defined without special-casing.
 
     Returns ``(df(v_id, n_reached, closeness), info)`` over reached
-    vertices only.
+    vertices only; ``info`` is :func:`landmark_distances`'.
     """
     dists, info = landmark_distances(
         edges, landmarks, directed=directed, max_rounds=max_rounds

@@ -177,10 +177,11 @@ def funnel(
     |steps| shuffles over frames that only ever shrink; no windows
     over the full event set, no cross products. Per-step state rides
     the :class:`~cminer_spark.plans.checkpoint.EphemeralStateStore`
-    parquet double-buffer, so long funnels keep a flat plan (eager
-    ``localCheckpoint`` blocks accumulate and degrade sharply past
-    ~20 iterations) and the step count is footer metadata, not a
-    second scan.
+    parquet double-buffer, so long funnels keep a flat plan and each
+    step's user count is read from parquet footers, not a second pass
+    over the step's plan. (The store has not been measured against
+    ``localCheckpoint`` here; see its docstring for the loops that
+    were.)
     """
     from cminer_spark.plans.checkpoint import EphemeralStateStore
 

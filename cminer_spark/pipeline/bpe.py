@@ -28,8 +28,9 @@ table only:
   would pin every superseded state's blocks until JVM GC of the RDD
   handle (``DataFrame.unpersist`` cannot free them: it only drops
   CacheManager entries, and localCheckpoint persistence is RDD-level),
-  which the store's own docstring measures as a 2-4x slowdown over a
-  long run.
+  so the session's persisted-RDD count would grow with the merge
+  count; ``test_train_leaves_no_persistent_state`` checks that a
+  training run leaves it unchanged.
 
 Merge semantics are the standard left-to-right non-overlapping pass:
 scanning a word's symbol sequence once, ``(a, b)`` occurrences merge

@@ -221,11 +221,15 @@ class EphemeralStateStore:
     vs 4.66 s, LPA 10 rounds 3.85 s vs 5.05 s, fixed-k PageRank
     (8 supersteps, the state rule swapped alone, 8 pairs) 3.47 s vs
     5.11 s, convergence-mode PageRank (sf0.1 events graph, 5 samples
-    a side) 1.87 s vs 2.18 s — so the
-    :func:`~cminer_spark.plans.loop.superstep_loop` operators, star CC
-    and ephemeral PageRank use :func:`truncate_lineage`. ANF, HITS,
-    SSSP, Katz, eigenvector, k-hop, funnel and BPE still use this
-    store; each needs its own measured port.
+    a side) 1.87 s vs 2.18 s, the SSSP relaxation (sf0.1 events graph,
+    118k edges, 49 rounds, 3 fresh JVMs a side, together with its
+    adjacency partitioning fix) 15.7 s vs 24.3 s — so the
+    :func:`~cminer_spark.plans.loop.superstep_loop` operators (which
+    include the SSSP relaxation), star CC and ephemeral PageRank use
+    :func:`truncate_lineage`. ANF (sketch and ``anf_exact``), HITS,
+    Katz, eigenvector, funnel and BPE still use this store; each
+    needs its own measured port (BPE keeps it for its persisted-RDD
+    bound, see :mod:`cminer_spark.pipeline.bpe`).
     """
 
     def __init__(self, spark: SparkSession, tag: str = "state"):

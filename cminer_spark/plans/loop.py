@@ -1,9 +1,12 @@
 """One superstep driver for the vertex-state loops.
 
-LPA, MIS, greedy coloring, k-core, hash-min CC and the generic
-:func:`~cminer_spark.operators.pregel.pregel` are the same loop: build
-a new state frame from the old one, watch one convergence scalar,
-materialize the state so the next round's plan starts from a scan.
+LPA, MIS, greedy coloring, k-core, hash-min CC, the generic
+:func:`~cminer_spark.operators.pregel.pregel` and the frontier
+relaxation behind shortest paths, landmark distances and k-hop
+neighborhoods (:mod:`cminer_spark.operators.paths`) are the same
+loop: build a new state frame from the old one, watch one convergence
+scalar, materialize the state so the next round's plan starts from a
+scan.
 :func:`superstep_loop` owns everything around the round body:
 
 * **resume** — with a durable checkpoint the loop restarts from

@@ -78,15 +78,16 @@ def test_k_hop_neighborhood_vs_networkx(spark):
 
 
 def test_k_hop_exhausts_early_for_large_k(spark):
-    # k far beyond the eccentricity: the frontier empties and the loop
-    # exits early instead of running k parquet-double-buffer rounds;
-    # the result survives the store teardown (localCheckpoint'd out).
+    # k far beyond the eccentricity: the frontier empties and the
+    # relaxation stops early instead of running k rounds; the result
+    # is the last round's localCheckpoint, so it outlives the loop's
+    # unpersisted adjacency.
     pairs = [(i, i + 1) for i in range(5)]
     e = edges_df(spark, pairs)
     seeds = spark.createDataFrame([(0,)], "v_id long")
     out = k_hop_neighborhood(e, seeds, k=50)
     assert {r.v_id for r in out.collect()} == set(range(6))
-    # re-collect after the ephemeral store dir is gone
+    # re-collect after the adjacency is unpersisted
     assert out.count() == 6
 
 

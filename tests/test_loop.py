@@ -1,5 +1,5 @@
 """The superstep driver's contract (plans/loop.py), checked through the
-six operators that run on it, on one tiny graph:
+operators that run on it, on one tiny graph:
 
 (a) a run killed after round 1 and resumed equals a fresh run;
 (b) resuming at a committed fixpoint runs zero rounds;
@@ -7,8 +7,9 @@ six operators that run on it, on one tiny graph:
 (d) a durable round writes its commit marker once, and that marker
     carries the round's stop value.
 
-(a), (b) and (d) cover the operators that take a checkpoint; coloring
-and hash-min CC take none, so they are checked on (c) only."""
+(a), (b) and (d) cover the operators that take a checkpoint; coloring,
+hash-min CC and landmark BFS take none, so they are checked on (c)
+only."""
 
 from __future__ import annotations
 
@@ -23,6 +24,7 @@ from cminer_spark.operators import (
     pregel,
 )
 from cminer_spark.operators.kcore import core_numbers
+from cminer_spark.operators.paths import landmark_distances, shortest_paths
 from cminer_spark.plans import loop
 from cminer_spark.plans.checkpoint import (
     SuperstepCheckpoint,
@@ -62,6 +64,10 @@ def _min_label(df, rounds, ck):
     )
 
 
+def _seeds(df, ids):
+    return df.sparkSession.createDataFrame([(i,) for i in ids], "v_id long")
+
+
 # name -> (run(df, max_rounds, checkpoint) -> (frame, info), full budget)
 OPS = {
     "lpa": (
@@ -82,8 +88,18 @@ OPS = {
         lambda df, r, ck: (hashmin_components(df, r), LoopInfo(rounds=r)),
         4,
     ),
+    "sssp": (
+        lambda df, r, ck: shortest_paths(
+            df, _seeds(df, [0]), directed=False, max_rounds=r, checkpoint=ck
+        ),
+        20,
+    ),
+    "landmark": (
+        lambda df, r, ck: landmark_distances(df, _seeds(df, [0, 13]), max_rounds=r),
+        20,
+    ),
 }
-RESUMABLE = {"lpa", "mis", "kcore", "pregel"}
+RESUMABLE = {"lpa", "mis", "kcore", "pregel", "sssp"}
 
 
 def _rows(df):

@@ -11,7 +11,7 @@ import pytest
 from cminer_spark.operators.paths import shortest_paths
 from cminer_spark.plans import SuperstepCheckpoint
 
-from tests.conftest import edges_df
+from tests.conftest import count_jobs, edges_df
 
 
 def _seeds_df(spark, seeds):
@@ -49,13 +49,13 @@ def _parity(spark, pairs, seeds, directed=True, weighted=False):
             assert math.isclose(got[v], d, abs_tol=1e-9), (v, got[v], d)
         else:
             assert got[v] == int(d), (v, got[v], d)
-    return info
+    return dists
 
 
 def test_single_source_directed_hops(spark):
     #   0→1→2→3, 0→3 shortcut, 4 unreachable
-    info = _parity(spark, [(0, 1), (1, 2), (2, 3), (0, 3), (4, 0)], [0])
-    assert not info.weighted
+    dists = _parity(spark, [(0, 1), (1, 2), (2, 3), (0, 3), (4, 0)], [0])
+    assert dict(dists.dtypes)["dist"] == "bigint"  # unweighted: hop counts
 
 
 def test_multi_source_undirected(spark):
@@ -92,6 +92,19 @@ def test_fixed_round_prefix_is_k_edge_minimum(spark):
     assert not info.converged and info.rounds == 3
     got = {r.v_id: r.dist for r in dists.collect()}
     assert got == {0: 0, 1: 1, 2: 2, 3: 3}
+
+
+def test_relaxation_job_budget(spark):
+    # set-up is the adjacency count and the seed cut; every round (the
+    # first one filling the adjacency cache too) is one job, and the
+    # result is the last round's cut, not a new one
+    df = edges_df(spark, [(i, i + 1) for i in range(6)])
+    seeds = _seeds_df(spark, [0])
+    (_dists, info), jobs = count_jobs(
+        spark, lambda: shortest_paths(df, seeds, directed=False)
+    )
+    assert info.converged and info.rounds == 7
+    assert jobs <= info.rounds + 3, jobs
 
 
 def test_checkpoint_resume_matches_fresh(spark, tmp_ckpt):
