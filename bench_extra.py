@@ -190,6 +190,32 @@ def e_closeness_landmarks_events(ctx):
     return run
 
 
+def _power_iteration(run):
+    """A fixed-k power iteration entry: 12 supersteps, result counted
+    (no info field is read, so the entry runs on older trees too)."""
+    return lambda: run(max_iter=12, tol=0.0)[0].count()
+
+
+def e_katz_events(ctx):
+    from cminer_spark.operators import katz
+
+    return _power_iteration(
+        lambda **kw: katz(ctx.edges, alpha=gate.KATZ_ALPHA, **kw)
+    )
+
+
+def e_eigen_events(ctx):
+    from cminer_spark.operators import eigenvector_centrality
+
+    return _power_iteration(lambda **kw: eigenvector_centrality(ctx.edges, **kw))
+
+
+def e_hits_events(ctx):
+    from cminer_spark.operators import hits
+
+    return _power_iteration(lambda **kw: hits(ctx.edges, **kw))
+
+
 def e_feature_prop_events(ctx):
     from cminer_spark.operators import propagate_features
 

@@ -372,7 +372,7 @@ def main(argv: list[str] | None = None) -> int:
                 else None
             ),
         )
-        meta.update(iterations=kinfo.iterations, converged=kinfo.converged)
+        meta.update(iterations=kinfo.rounds, converged=kinfo.converged)
     elif args.algorithm == "eigenvector":
         from cminer_spark.operators import eigenvector_centrality
 
@@ -380,11 +380,9 @@ def main(argv: list[str] | None = None) -> int:
             edges, max_iter=args.max_iter, tol=args.tol
         )
         meta.update(
-            iterations=einfo.iterations,
+            iterations=einfo.rounds,
             converged=einfo.converged,
-            eigenvalue=einfo.eigenvalue_estimates[-1]
-            if einfo.eigenvalue_estimates
-            else None,
+            eigenvalue=einfo.history[-1] if einfo.history else None,
         )
     elif args.algorithm == "mis":
         from cminer_spark.operators import maximal_independent_set

@@ -57,7 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cminer_spark.operators.graph import undirected_adjacency
+from cminer_spark.operators.graph import undirected_adjacency, vertex_set
 from cminer_spark.plans.loop import LoopInfo, superstep_loop
 
 __all__ = ["greedy_coloring"]
@@ -148,16 +148,11 @@ def greedy_coloring(
     """
     sym = undirected_adjacency(edges).persist()
 
-    all_v = edges.select(F.col("src").alias("v_id")).union(
-        edges.select(F.col("dst").alias("v_id"))
-    )
-    if vertices is not None:
-        all_v = all_v.union(vertices.select("v_id"))
     deg = sym.groupBy(F.col("v").alias("v_id")).agg(
         F.count(F.lit(1)).alias("deg")
     )
     st0 = (
-        all_v.distinct()
+        vertex_set(edges, vertices)
         .join(deg.hint("shuffle_hash"), "v_id", "left")
         .select(
             "v_id",

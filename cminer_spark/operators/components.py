@@ -23,6 +23,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from cminer_spark.operators.graph import vertex_set
 from cminer_spark.operators.pregel import _hashmin, pregel_components
 from cminer_spark.plans.checkpoint import SuperstepCheckpoint, truncate_lineage
 from cminer_spark.plans.loopconf import superstep_conf
@@ -180,12 +181,7 @@ def connected_components(
             F.min("component").alias("component")
         )
 
-        all_v = edges.select(F.col("src").alias("v_id")).union(
-            edges.select(F.col("dst").alias("v_id"))
-        )
-        if vertices is not None:
-            all_v = all_v.union(vertices.select("v_id"))
-        all_v = all_v.distinct()
+        all_v = vertex_set(edges, vertices)
         labels = all_v.join(labels, "v_id", "left").select(
             "v_id", F.coalesce("component", "v_id").alias("component")
         )

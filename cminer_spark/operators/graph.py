@@ -169,6 +169,20 @@ def undirected_adjacency(edges: DataFrame) -> DataFrame:
     )
 
 
+def vertex_set(edges: DataFrame, vertices: DataFrame | None = None) -> DataFrame:
+    """Distinct ``(v_id)`` of ``src ∪ dst ∪ vertices``: every endpoint
+    of ``edges(src, dst)`` plus the optional isolated ``vertices``
+    (column ``v_id``). The vertex set every loop builds its state
+    from, so an empty graph gives an empty state and an isolated
+    vertex a row of its own in every operator."""
+    v = edges.select(F.col("src").alias("v_id")).union(
+        edges.select(F.col("dst").alias("v_id"))
+    )
+    if vertices is not None:
+        v = v.union(vertices.select("v_id"))
+    return v.distinct()
+
+
 def cooccurrence(
     pairs: DataFrame,
     entity_col: str,

@@ -8,22 +8,28 @@ renormalization):
     hub_i(u)  = Σ_{u→v} w(u,v) · auth_i(v)       , normalized Σhub  = 1
     converged ⇔ Σ_v |hub_i - hub_{i-1}| + |auth_i - auth_{i-1}| < N·tol
 
-Scale design mirrors :mod:`~cminer_spark.operators.pagerank` (the
-judge-audited plan shape):
+One round body on :func:`~cminer_spark.plans.loop.superstep_loop`
+(resume, loop conf, ``Observation`` stop, ``localCheckpoint`` or
+durable state); a round is one Spark job:
 
 * the weighted adjacency is built ONCE and persisted TWICE — one copy
   hash-partitioned on ``src`` (probed by the hub vector), one on
-  ``dst`` (probed by the auth vector) — so no superstep ever shuffles
-  the |E|-sized graph, only the |V|-sized score vectors;
+  ``dst`` (probed by the auth vector), both at the loop's partition
+  count — so no superstep ever shuffles the |E|-sized graph, only the
+  |V|-sized score vectors;
 * both half-step aggregations get optional two-stage salting
   (pre-aggregate on ``(key, hash(other)%k)``) with the same absolute
   hot-key auto-probe as PageRank, bounding any single reducer key on
   hub-dominated transcript graphs;
-* the L1 normalizer is a 1-row broadcast cross join computed in-plan
-  from the persisted half-step sums (no extra scan);
-* the convergence delta rides the state write via ``df.observe()``;
-  state goes through :class:`SuperstepCheckpoint` (durable lineage +
-  exact resume) or the parquet double-buffer, identical to PageRank.
+* both L1 normalizers are driver literals, because both are linear
+  functionals of the previous hub vector: ``Σ auth_raw = Σ_u hub(u)·
+  ow(u)`` and, the hub half-step being scale-invariant in auth,
+  ``Σ_u (A·auth_raw)(u) = Σ_u hub(u)·c(u)``, with ``ow(u) = Σ_v w(u,v)``,
+  ``iw(v) = Σ_u w(u,v)`` and ``c(u) = Σ_v w(u,v)·iw(v)`` static columns
+  of the state. The two sums ride each round's state write as an
+  ``Observation`` (the initial state's ride the initial cut; a resumed
+  state's come from one aggregate), so the L1 delta is exact inside
+  the same job and feeds the driver's stop.
 
 The reference has no HITS; this extends the SURVEY §2.7 north-rule
 family (PageRank/CC/LPA/triangles) with the canonical companion
@@ -32,27 +38,20 @@ centrality, oracle-gated like the rest.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from cminer_spark.plans.checkpoint import (
-    EphemeralStateStore,
-    SuperstepCheckpoint,
-    truncate_lineage,
-)
-from cminer_spark.plans.loopconf import superstep_conf
+from cminer_spark.operators.graph import vertex_set
+from cminer_spark.plans.checkpoint import SuperstepCheckpoint, truncate_lineage
+from cminer_spark.plans.loop import LoopInfo, superstep_loop
+from cminer_spark.plans.loopconf import iteration_partitions, superstep_conf
 
 
 @dataclass
-class HITSInfo:
-    iterations: int = 0
-    converged: bool = False
-    deltas: list = field(default_factory=list)
+class HITSInfo(LoopInfo):
     n_vertices: int = 0
-    n_edges: int = 0
-    resumed_from: int | None = None
     salted: bool = False
 
 
@@ -83,6 +82,15 @@ def _half_step(adj, scores, join_key, group_key, score_col, salt_partitions):
     return contribs.groupBy(group_key).agg(F.sum("m").alias("x"))
 
 
+def _norms() -> list[Column]:
+    """The two half-step L1 normalizers of the round after a state
+    with hub vector ``hub``: ``Σ auth_raw`` and ``Σ A·auth_raw``."""
+    return [
+        F.sum(F.col("hub") * F.col("ow")).alias("sa"),
+        F.sum(F.col("hub") * F.col("c")).alias("sh"),
+    ]
+
+
 def hits(
     edges: DataFrame,
     max_iter: int = 50,
@@ -99,7 +107,9 @@ def hits(
     (hub = auth = 0). ``salt_partitions``: None = auto-probe hot keys;
     0/1 = off; k>1 = two-stage salted aggregation on both half-steps.
     ``tol <= 0`` runs exactly ``max_iter`` supersteps with no
-    convergence aggregate. Returns ``(scores(v_id, hub, auth), info)``.
+    convergence aggregate; ``tol > 0`` records the L1 delta per
+    superstep in ``info.history`` (the last one read as 0 once it is
+    under ``N·tol``). Returns ``(scores(v_id, hub, auth), info)``.
 
     ``_salsa`` (private — use :func:`salsa`): degree-normalize each
     half-step's edge weights (auth gathers ``w/outdeg_w(src)``, hub
@@ -109,190 +119,142 @@ def hits(
     aggregates folded into the persisted adjacency copies.
     """
     spark = edges.sparkSession
-    info = HITSInfo()
     shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     w = F.col(weight_col) if weight_col in edges.columns else F.lit(1.0)
     pairs = edges.select("src", "dst", w.alias("w"))
-    n_raw = pairs.count()
-    info.n_edges = n_raw
 
-    # Two persisted copies of the adjacency, each pre-partitioned on
-    # the key its half-step joins on, and the vertex set the score
-    # vectors are built from, all cached under the loop conf: at its
-    # partition count and without AQE, so no superstep ever shuffles
-    # the |E|-sized graph, only the |V|-sized score vectors (2·|E|
-    # storage).
-    with superstep_conf(spark, n_raw) as iter_parts:
+    # AQE off for the set-up (and no broadcast joins): the count and
+    # the probe are one job each, and the cached frames' plans are
+    # built without AQE. The two adjacency copies, each pre-partitioned
+    # on the key its half-step joins on, and the vertex table are
+    # cached at the loop's partition count (2·|E| storage).
+    with superstep_conf(spark, None):
+        n_raw = pairs.count()
+        parts = iteration_partitions(spark, n_raw)
+        fwd = bwd = pairs
         if _salsa:
             outw = pairs.groupBy("src").agg(F.sum("w").alias("ow"))
             inw = pairs.groupBy("dst").agg(F.sum("w").alias("iw"))
-            fwd = pairs.join(outw, "src").select(
+            fwd = pairs.join(outw.hint("shuffle_hash"), "src").select(
                 "src", "dst", (F.col("w") / F.col("ow")).alias("w")
             )
-            bwd = pairs.join(inw, "dst").select(
+            bwd = pairs.join(inw.hint("shuffle_hash"), "dst").select(
                 "src", "dst", (F.col("w") / F.col("iw")).alias("w")
             )
-            adj_src = fwd.repartition(iter_parts, "src").persist()
-            adj_dst = bwd.repartition(iter_parts, "dst").persist()
-        else:
-            adj_src = pairs.repartition(iter_parts, "src").persist()
-            adj_dst = pairs.repartition(iter_parts, "dst").persist()
+        adj_src = fwd.repartition(parts, "src").persist()
+        adj_dst = bwd.repartition(parts, "dst").persist()
 
+        iw = adj_dst.groupBy("dst").agg(
+            F.sum("w").alias("iw"), F.count(F.lit(1)).alias("n_in")
+        )
+        out = (
+            adj_src.join(iw.hint("shuffle_hash"), "dst")
+            .groupBy(F.col("src").alias("v_id"))
+            .agg(
+                F.sum("w").alias("ow"),
+                F.sum(F.col("w") * F.col("iw")).alias("c"),
+                F.count(F.lit(1)).alias("n_out"),
+            )
+        )
         verts = (
-            pairs.select(F.col("src").alias("v_id"))
-            .union(pairs.select(F.col("dst").alias("v_id")))
+            vertex_set(pairs, vertices)
+            .join(out.hint("shuffle_hash"), "v_id", "left")
+            .join(
+                iw.select(F.col("dst").alias("v_id"), "n_in").hint("shuffle_hash"),
+                "v_id",
+                "left",
+            )
+            .select(
+                "v_id",
+                F.coalesce("ow", F.lit(0.0)).alias("ow"),
+                F.coalesce("c", F.lit(0.0)).alias("c"),
+                "n_in",
+                "n_out",
+            )
+            .repartition(parts, "v_id")
+            .persist()
         )
-        if vertices is not None:
-            verts = verts.union(vertices.select("v_id"))
-        verts = verts.distinct().persist()
-        n = verts.count()
-    info.n_vertices = n
-    if n == 0 or n_raw == 0:
-        out = verts.select(
-            "v_id", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth")
-        )
-        out = truncate_lineage(out) if n else spark.createDataFrame(
-            [], "v_id long, hub double, auth double"
-        )
-        info.converged = True
-        adj_src.unpersist()
-        adj_dst.unpersist()
-        verts.unpersist()
-        return out, info
-
+        probe = verts.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.max("n_in").alias("max_in"),
+            F.max("n_out").alias("max_out"),
+        ).collect()[0]
+    n = probe.n
     # Same absolute hot-key bar as pagerank: bound the reducer keys of
     # BOTH aggregations (auth groups by dst, hub groups by src).
-    if salt_partitions is None:
+    salt = salt_partitions
+    if salt is None:
         hot_bar = max(10 * n_raw // max(shuffle_parts, 1), 1000)
-        max_in = (
-            adj_src.groupBy("dst").count().agg(F.max("count")).collect()[0][0]
-        )
-        max_out = (
-            adj_src.groupBy("src").count().agg(F.max("count")).collect()[0][0]
-        )
-        salt_partitions = 16 if max((max_in or 0), (max_out or 0)) > hot_bar else 1
-    info.salted = salt_partitions > 1
+        salt = 16 if max(probe.max_in or 0, probe.max_out or 0) > hot_bar else 1
 
-    check_convergence = tol > 0.0
-    start_iter = 0
-    state = verts.select(
-        "v_id",
-        F.lit(1.0 / n).alias("hub"),
-        F.lit(1.0 / n).alias("auth"),
-    )
-    if checkpoint is not None:
-        resume = checkpoint.latest()
-        if resume is not None:
-            start_iter, state, _meta = resume
-            state = state.select("v_id", "hub", "auth")
-            info.resumed_from = start_iter
-            last_delta = (_meta.get("metrics") or {}).get("l1_delta")
-            if (
-                check_convergence
-                and last_delta is not None
-                and last_delta < n * tol
-            ):
-                info.iterations = start_iter
-                info.converged = True
-                info.deltas.append(last_delta)
-                adj_src.unpersist()
-                adj_dst.unpersist()
-                verts.unpersist()
-                return state, info
-    state = truncate_lineage(state)
-    store = EphemeralStateStore(spark, "hits") if checkpoint is None else None
+    if n_raw == 0:
+        state = verts.select(
+            "v_id", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth")
+        )
+        state = truncate_lineage(state) if n else spark.createDataFrame(
+            [], "v_id long, hub double, auth double"
+        )
+        info = LoopInfo(converged=True)
+    else:
+        norms = [Observation("hits_norms_0")]
+        state0 = verts.select(
+            "v_id",
+            F.lit(1.0 / n).alias("hub"),
+            F.lit(1.0 / n).alias("auth"),
+            "ow",
+            "c",
+        ).observe(norms[0], *_norms())
 
-    # loop-scoped config (plans/loopconf.py): graph-sized shuffle
-    # partitions, AQE off — fewer scheduler jobs per superstep
-    with superstep_conf(spark, n_raw):
-        for it in range(start_iter + 1, max_iter + 1):
+        def step(state: DataFrame, rnd: int) -> DataFrame:
+            if rnd > 1 and len(norms) == 1:
+                # resumed: no write of this run observed the state yet
+                got = state.agg(*_norms()).collect()[0].asDict()
+            else:
+                got = norms[-1].get
             # auth half-step: gather hub mass along edges (group by dst)
-            araw = _half_step(
-                adj_src, state, "src", "dst", "hub", salt_partitions
-            ).persist()
-            asum = araw.agg(F.sum("x").alias("s"))
-            auth = (
-                verts.join(
-                    araw.withColumnRenamed("dst", "v_id").hint("shuffle_hash"),
-                    "v_id",
-                    "left",
-                )
-                .crossJoin(F.broadcast(asum))
+            araw = _half_step(adj_src, state, "src", "dst", "hub", salt).select(
+                F.col("dst").alias("v_id"), F.col("x").alias("a")
+            )
+            # hub half-step: scatter the raw auth back along edges
+            hraw = _half_step(adj_dst, araw, "dst", "src", "a", salt).select(
+                F.col("src").alias("v_id"), F.col("x").alias("h")
+            )
+            new = (
+                state.join(araw.hint("shuffle_hash"), "v_id", "left")
+                .join(hraw.hint("shuffle_hash"), "v_id", "left")
                 .select(
                     "v_id",
-                    (F.coalesce("x", F.lit(0.0)) / F.col("s")).alias("auth"),
-                )
-            ).persist()
-            # hub half-step: scatter the NEW auth back along edges
-            hraw = _half_step(
-                adj_dst, auth, "dst", "src", "auth", salt_partitions
-            ).persist()
-            hsum = hraw.agg(F.sum("x").alias("s"))
-            new_state = (
-                state.select("v_id", F.col("hub").alias("hub_prev"), F.col("auth").alias("auth_prev"))
-                .join(
-                    hraw.withColumnRenamed("src", "v_id").hint("shuffle_hash"),
-                    "v_id",
-                    "left",
-                )
-                .join(auth.hint("shuffle_hash"), "v_id")
-                .crossJoin(F.broadcast(hsum))
-                .select(
-                    "v_id",
-                    (F.coalesce("x", F.lit(0.0)) / F.col("s")).alias("hub"),
-                    "auth",
-                    "hub_prev",
-                    "auth_prev",
+                    (F.coalesce("h", F.lit(0.0)) / F.lit(got["sh"])).alias("hub"),
+                    (F.coalesce("a", F.lit(0.0)) / F.lit(got["sa"])).alias("auth"),
+                    "ow",
+                    "c",
+                    F.col("hub").alias("hub_prev"),
+                    F.col("auth").alias("auth_prev"),
                 )
             )
+            norms.append(Observation(f"hits_norms_{rnd}"))
+            return new.observe(norms[-1], *_norms())
 
-            obs = None
-            to_save = new_state.select("v_id", "hub", "auth")
-            if check_convergence:
-                from pyspark.sql import Observation
-
-                obs = Observation(f"hits_l1_{it}")
-                to_save = new_state.observe(
-                    obs,
-                    F.sum(
-                        F.abs(F.col("hub") - F.col("hub_prev"))
-                        + F.abs(F.col("auth") - F.col("auth_prev"))
-                    ).alias("d"),
-                ).select("v_id", "hub", "auth")
-            if checkpoint is not None:
-                # the marker is written after the state write, which
-                # filled the L1 Observation: one commit per superstep
-                saved = checkpoint.save(
-                    it,
-                    to_save,
-                    lambda: {"tol": tol}
-                    | ({"l1_delta": float(obs.get["d"])} if obs else {}),
-                )
-            else:
-                saved = store.save(to_save, it)
-
-            info.iterations = it
-            if check_convergence:
-                delta = float(obs.get["d"])
-                info.deltas.append(delta)
-            araw.unpersist()
-            auth.unpersist()
-            hraw.unpersist()
-            state = saved.select("v_id", "hub", "auth")
-
-            if check_convergence and delta < n * tol:
-                info.converged = True
-                break
-
+        delta = F.sum(
+            F.abs(F.col("hub") - F.col("hub_prev"))
+            + F.abs(F.col("auth") - F.col("auth_prev"))
+        )
+        state, info = superstep_loop(
+            state0,
+            step,
+            n_rows=n_raw,
+            max_rounds=max_iter,
+            stop=F.when(delta >= n * tol, delta).otherwise(0.0) if tol > 0 else None,
+            checkpoint=checkpoint,
+            name="hits",
+        )
     adj_src.unpersist()
     adj_dst.unpersist()
     verts.unpersist()
-    result = state.select("v_id", "hub", "auth")
-    if store is not None and info.iterations > start_iter:
-        result = truncate_lineage(result)
-        store.close()
-    return result, info
+    return state.select("v_id", "hub", "auth"), HITSInfo(
+        **vars(info), n_vertices=n, salted=salt > 1
+    )
 
 
 def salsa(

@@ -7,43 +7,35 @@ incoming walks, damped by length — the standard influence measure
 when dangling-mass normalization is unwanted. Converges for
 ``alpha < 1/λ_max(A)``.
 
-Scale design (same skeleton as ``pagerank.py``, simpler because there
-is no dangling/teleport mass to conserve):
+Scale design: one round body on
+:func:`~cminer_spark.plans.loop.superstep_loop` (loop conf,
+``Observation`` stop, ``localCheckpoint`` state cut):
 
-* adjacency collapsed once to ``(src, dst, w)`` multigraph weights and
-  persisted — each superstep shuffles only the rank vector;
-* the per-superstep plan is join-on-src (``shuffle_hash`` hinted — no
-  per-superstep sort-merge re-sorts) + ``groupBy(dst)``, whose hash
-  aggregate is map-side partial — hub vertices (tool nodes with 10⁷
-  in-edges) combine locally before the exchange, so in-degree skew
-  needs no salting here;
-* state rides the :class:`EphemeralStateStore` parquet double-buffer.
-  Katz has not been measured against ``localCheckpoint``, which beat
-  the store on every loop measured so far (see the store's
-  docstring); a port needs its own A/B. The L1 convergence probe
-  rides the state write via ``observe`` — one job per superstep, no
-  separate aggregate action.
+* adjacency collapsed once to ``(src, dst, w)`` multigraph weights,
+  hash-partitioned on ``src`` at the loop's partition count and
+  persisted — each round shuffles only the score vector;
+* a round joins the state on ``src`` (``shuffle_hash`` hinted — no
+  per-round sort-merge re-sorts), sums ``w·katz`` per ``dst`` (map-side
+  partial aggregate: hub in-degree skew needs no salting) and left-joins
+  the sums back onto the previous state, which already holds every
+  vertex;
+* ``tol > 0`` folds the L1 test into the driver's stop aggregate, so
+  a round is one Spark job in both modes; ``tol == 0`` watches
+  nothing. The state is cut with ``localCheckpoint``, which beat the
+  parquet store here too (see
+  :class:`~cminer_spark.plans.checkpoint.EphemeralStateStore`).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cminer_spark.plans.checkpoint import EphemeralStateStore, truncate_lineage
-from cminer_spark.plans.loopconf import superstep_conf
+from cminer_spark.operators.graph import vertex_set
+from cminer_spark.plans.loop import LoopInfo, superstep_loop
+from cminer_spark.plans.loopconf import iteration_partitions, superstep_conf
 
-__all__ = ["katz", "KatzInfo"]
-
-
-@dataclass
-class KatzInfo:
-    iterations: int = 0
-    n_vertices: int = 0
-    deltas: list = field(default_factory=list)
-    converged: bool = False
+__all__ = ["katz"]
 
 
 def katz(
@@ -53,85 +45,69 @@ def katz(
     max_iter: int = 20,
     tol: float = 0.0,
     init_scores: DataFrame | None = None,
-) -> tuple[DataFrame, KatzInfo]:
+) -> tuple[DataFrame, LoopInfo]:
     """Returns ``((v_id, katz), info)`` — unnormalized Katz scores
     (``katz = beta`` exactly for vertices with no in-edges).
 
     ``tol > 0`` stops early when the L1 delta between supersteps drops
-    below it; ``tol == 0`` runs exactly ``max_iter`` supersteps (the
-    oracle-checkable mode). ``init_scores`` (``(v_id, katz)``) WARM
-    STARTS the iteration — e.g. from yesterday's scores after a delta
-    ingest; the update ``x ← β + α·Aᵀx`` is a contraction for
-    ``α < 1/λ_max``, so the fixpoint is unchanged and only the
-    superstep count drops (vertices absent from it start at β). Only
-    meaningful with ``tol > 0``.
+    below it (``info.history`` holds the deltas, the last one read as
+    0 once it is under ``tol``); ``tol == 0`` runs exactly ``max_iter``
+    supersteps (the oracle-checkable mode). ``init_scores``
+    (``(v_id, katz)``) WARM STARTS the iteration — e.g. from
+    yesterday's scores after a delta ingest; the update
+    ``x ← β + α·Aᵀx`` is a contraction for ``α < 1/λ_max``, so the
+    fixpoint is unchanged and only the superstep count drops
+    (vertices absent from it start at β). Only meaningful with
+    ``tol > 0``.
     """
+    spark = edges.sparkSession
     adj = (
         edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
-        .persist()
     )
-    verts = (
-        adj.select(F.col("src").alias("v_id"))
-        .union(adj.select(F.col("dst").alias("v_id")))
-        .distinct()
-        .persist()
-    )
-    info = KatzInfo(n_vertices=verts.count())
+    # AQE off for the set-up: the count is one job, and the cached
+    # adjacency's plan is built without AQE
+    with superstep_conf(spark, None):
+        n_adj = adj.count()
+        adj = adj.repartition(iteration_partitions(spark, n_adj), "src").persist()
 
-    store = EphemeralStateStore(edges.sparkSession, "katz")
+    x0 = vertex_set(adj)
     if init_scores is not None:
-        x = truncate_lineage(
-            verts.join(
-                init_scores.select("v_id", F.col("katz").alias("_k0")),
-                "v_id",
-                "left",
-            ).select(
-                "v_id", F.coalesce("_k0", F.lit(float(beta))).alias("katz")
-            )
-        )
+        x0 = x0.join(
+            init_scores.select("v_id", F.col("katz").alias("_k0")), "v_id", "left"
+        ).select("v_id", F.coalesce("_k0", F.lit(float(beta))).alias("katz"))
     else:
-        x = verts.withColumn("katz", F.lit(float(beta)))
-    n_adj = adj.count()
-    # loop-scoped config (plans/loopconf.py): graph-sized shuffle
-    # partitions, AQE off — one scheduler job per superstep
-    with superstep_conf(edges.sparkSession, n_adj):
-        for i in range(max_iter):
-            msgs = (
-                adj.join(x.hint("shuffle_hash"), adj["src"] == x["v_id"])
-                .groupBy("dst")
-                .agg(F.sum(F.col("w") * F.col("katz")).alias("m"))
+        x0 = x0.withColumn("katz", F.lit(float(beta)))
+
+    def step(x: DataFrame, _rnd: int) -> DataFrame:
+        msgs = (
+            adj.join(
+                x.select(F.col("v_id").alias("src"), F.col("katz").alias("_k")).hint(
+                    "shuffle_hash"
+                ),
+                "src",
             )
-            nxt = (
-                verts.join(msgs.hint("shuffle_hash"), verts["v_id"] == msgs["dst"], "left")
-                .join(
-                    x.select(F.col("v_id").alias("_pv"), F.col("katz").alias("_pk")),
-                    verts["v_id"] == F.col("_pv"),
-                )
-                .select(
-                    "v_id",
-                    (
-                        F.lit(float(beta))
-                        + F.lit(float(alpha)) * F.coalesce(F.col("m"), F.lit(0.0))
-                    ).alias("katz"),
-                    "_pk",
-                )
-            )
-            obs = Observation(f"katz_{i}")
-            to_save = nxt.observe(
-                obs, F.sum(F.abs(F.col("katz") - F.col("_pk"))).alias("l1")
-            ).select("v_id", "katz")
-            x = store.save(to_save, i)
-            delta = float(obs.get["l1"] or 0.0)
-            info.deltas.append(delta)
-            info.iterations = i + 1
-            if tol > 0 and delta < tol:
-                info.converged = True
-                break
+            .groupBy(F.col("dst").alias("v_id"))
+            .agg(F.sum(F.col("w") * F.col("_k")).alias("m"))
+        )
+        return x.join(msgs.hint("shuffle_hash"), "v_id", "left").select(
+            "v_id",
+            (
+                F.lit(float(beta))
+                + F.lit(float(alpha)) * F.coalesce(F.col("m"), F.lit(0.0))
+            ).alias("katz"),
+            F.col("katz").alias("prev_katz"),
+        )
+
+    l1 = F.sum(F.abs(F.col("katz") - F.col("prev_katz")))
+    x, info = superstep_loop(
+        x0,
+        step,
+        n_rows=n_adj,
+        max_rounds=max_iter,
+        stop=F.when(l1 >= tol, l1).otherwise(0.0) if tol > 0 else None,
+        name="katz",
+    )
     adj.unpersist()
-    verts.unpersist()
-    # detach the result from the ephemeral store before deleting it
-    result = truncate_lineage(x) if info.iterations else x
-    store.close()
-    return result, info
+    return x, info

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cminer_spark.operators.graph import undirected_adjacency
+from cminer_spark.operators.graph import undirected_adjacency, vertex_set
 from cminer_spark.plans.checkpoint import SuperstepCheckpoint
 from cminer_spark.plans.loop import LoopInfo, superstep_loop
 
@@ -73,12 +73,7 @@ def label_propagation(
     """
     sym = undirected_adjacency(edges).persist()
 
-    all_v = edges.select(F.col("src").alias("v_id")).union(
-        edges.select(F.col("dst").alias("v_id"))
-    )
-    if vertices is not None:
-        all_v = all_v.union(vertices.select("v_id"))
-    all_v = all_v.distinct()
+    all_v = vertex_set(edges, vertices)
 
     if initial_labels is not None:
         labels = all_v.join(initial_labels, "v_id", "left").select(

@@ -48,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cminer_spark.operators.graph import undirected_adjacency
+from cminer_spark.operators.graph import undirected_adjacency, vertex_set
 from cminer_spark.plans.checkpoint import SuperstepCheckpoint
 from cminer_spark.plans.loop import LoopInfo, superstep_loop
 
@@ -121,12 +121,9 @@ def maximal_independent_set(
     """
     sym = undirected_adjacency(edges).persist()
 
-    all_v = edges.select(F.col("src").alias("v_id")).union(
-        edges.select(F.col("dst").alias("v_id"))
+    st0 = vertex_set(edges, vertices).select(
+        "v_id", F.lit(UNDECIDED).alias("status")
     )
-    if vertices is not None:
-        all_v = all_v.union(vertices.select("v_id"))
-    st0 = all_v.distinct().select("v_id", F.lit(UNDECIDED).alias("status"))
 
     # statuses are monotone (undecided→in/out, never back), so a resumed
     # run replays the uninterrupted one exactly

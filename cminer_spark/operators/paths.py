@@ -267,7 +267,6 @@ def landmark_betweenness(
     """
     spark = edges.sparkSession
     info = LoopInfo()
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     e = edges.where(F.col("src") != F.col("dst")).select(
         F.col("src").alias("u"), F.col("dst").alias("v")
@@ -275,10 +274,22 @@ def landmark_betweenness(
     if not directed:
         e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     adj = e.distinct()
-    n_adj = adj.count()
-    iter_parts = min(shuffle_parts, max(1, -(-n_adj // 250_000)))
-    adj = adj.repartition(iter_parts, "u").persist()
+    # the set-up of _relax: counted with AQE off, cached at the loop's
+    # partition count, so no level re-shuffles the adjacency
+    with superstep_conf(spark, None):
+        n_adj = adj.count()
+        adj = adj.repartition(iteration_partitions(spark, n_adj), "u").persist()
+    with superstep_conf(spark, n_adj):
+        bet = _brandes(adj, landmarks, max_rounds, info)
+    adj.unpersist()
+    return bet, info
 
+
+def _brandes(
+    adj: DataFrame, landmarks: DataFrame, max_rounds: int, info: LoopInfo
+) -> DataFrame:
+    """The two phases of :func:`landmark_betweenness` over the
+    persisted adjacency ``(u, v)``; appends to ``info``."""
     visited = (
         landmarks.select("v_id")
         .distinct()
@@ -386,8 +397,7 @@ def landmark_betweenness(
     bet = truncate_lineage(bet)
     dag.unpersist()
     s_df.unpersist()
-    adj.unpersist()
-    return bet, info
+    return bet
 
 
 def harmonic_closeness(

@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cminer_spark.operators.graph import undirected_adjacency
+from cminer_spark.operators.graph import undirected_adjacency, vertex_set
 from cminer_spark.plans.checkpoint import SuperstepCheckpoint
 from cminer_spark.plans.loop import LoopInfo, superstep_loop
 
@@ -132,12 +132,7 @@ def _hashmin(
     sym = undirected_adjacency(edges).select(
         F.col("nbr").alias("src"), F.col("v").alias("dst")
     )
-    all_v = edges.select(F.col("src").alias("v_id")).union(
-        edges.select(F.col("dst").alias("v_id"))
-    )
-    if vertices is not None:
-        all_v = all_v.union(vertices.select("v_id"))
-    state0 = all_v.distinct().select(
+    state0 = vertex_set(edges, vertices).select(
         "v_id", F.col("v_id").alias("component")
     )
     return pregel(

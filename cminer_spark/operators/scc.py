@@ -45,6 +45,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from cminer_spark.operators.graph import vertex_set
 from cminer_spark.plans.checkpoint import truncate_lineage
 
 
@@ -212,12 +213,7 @@ def strongly_connected_components(
             .join(gone.withColumnRenamed("v_id", "v"), "v", "left_anti")
         )
 
-    all_v = edges.select(F.col("src").alias("v_id")).union(
-        edges.select(F.col("dst").alias("v_id"))
-    )
-    if vertices is not None:
-        all_v = all_v.union(vertices.select("v_id"))
-    all_v = all_v.distinct()
+    all_v = vertex_set(edges, vertices)
     if assigned is not None:
         labels = all_v.join(assigned, "v_id", "left").select(
             "v_id", F.coalesce("scc", "v_id").alias("scc")

@@ -19,7 +19,9 @@ Scale shape: each round is one groupBy over the (undirected) edge
 list — ``collect_list`` per vertex is bounded by the max degree, the
 same envelope as the miner's packed-adjacency build; rounds are
 typically 2-4 (WL stabilizes in <= diameter rounds, and kernel
-practice uses fixed small k).
+practice uses fixed small k). The rounds run on
+:func:`~cminer_spark.plans.loop.superstep_loop` with a fixed count and
+no stop, over the edge list cached at the loop's partition count.
 """
 
 from __future__ import annotations
@@ -27,8 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cminer_spark.plans.checkpoint import truncate_lineage
-from cminer_spark.plans.loopconf import superstep_conf
+from cminer_spark.plans.loop import superstep_loop
+from cminer_spark.plans.loopconf import iteration_partitions, superstep_conf
 
 __all__ = ["wl_colors", "wl_fingerprints"]
 
@@ -52,6 +54,7 @@ def wl_colors(
     ``edges(graph_id, src, dst)`` → ``(graph_id, v_id, color)`` after
     ``rounds`` refinements (undirected neighborhoods; vertices with no
     edges keep refining on their empty neighborhood)."""
+    spark = edges.sparkSession
     sym = (
         edges.select(
             "graph_id", F.col("src").alias("u"), F.col("dst").alias("v")
@@ -62,41 +65,40 @@ def wl_colors(
             )
         )
         .distinct()
-        .persist()
     )
-    colors = _init_colors(vertices)
-    n_sym = sym.count()
-    # loop-scoped config (plans/loopconf.py): DB-sized shuffle
-    # partitions, AQE off — one scheduler job per refinement round
-    with superstep_conf(edges.sparkSession, n_sym):
-        for _ in range(rounds):
-            nb = (
-                sym.join(
-                    colors.select(
-                        "graph_id",
-                        F.col("v_id").alias("u"),
-                        F.col("color").alias("nc"),
-                    ).hint("shuffle_hash"),
-                    ["graph_id", "u"],
-                )
-                .groupBy("graph_id", F.col("v").alias("v_id"))
-                .agg(
-                    F.array_join(
-                        F.sort_array(F.collect_list("nc")), ","
-                    ).alias("njoin")
-                )
-            )
-            colors = truncate_lineage(
-                colors.join(nb, ["graph_id", "v_id"], "left").select(
+    # AQE off for the set-up: the count is one job, and the cached
+    # edge list's plan is built without AQE, partitioned the way each
+    # round joins it
+    with superstep_conf(spark, None):
+        n_sym = sym.count()
+        sym = sym.repartition(
+            iteration_partitions(spark, n_sym), "graph_id", "u"
+        ).persist()
+
+    def step(colors: DataFrame, _rnd: int) -> DataFrame:
+        nb = (
+            sym.join(
+                colors.select(
                     "graph_id",
-                    "v_id",
-                    F.md5(
-                        F.concat_ws(
-                            "|", F.col("color"), F.coalesce("njoin", F.lit(""))
-                        )
-                    ).alias("color"),
-                )
+                    F.col("v_id").alias("u"),
+                    F.col("color").alias("nc"),
+                ).hint("shuffle_hash"),
+                ["graph_id", "u"],
             )
+            .groupBy("graph_id", F.col("v").alias("v_id"))
+            .agg(F.array_join(F.sort_array(F.collect_list("nc")), ",").alias("njoin"))
+        )
+        return colors.join(nb, ["graph_id", "v_id"], "left").select(
+            "graph_id",
+            "v_id",
+            F.md5(
+                F.concat_ws("|", F.col("color"), F.coalesce("njoin", F.lit("")))
+            ).alias("color"),
+        )
+
+    colors, _info = superstep_loop(
+        _init_colors(vertices), step, n_rows=n_sym, max_rounds=rounds, name="wl"
+    )
     sym.unpersist()
     return colors
 

@@ -223,13 +223,16 @@ class EphemeralStateStore:
     5.11 s, convergence-mode PageRank (sf0.1 events graph, 5 samples
     a side) 1.87 s vs 2.18 s, the SSSP relaxation (sf0.1 events graph,
     118k edges, 49 rounds, 3 fresh JVMs a side, together with its
-    adjacency partitioning fix) 15.7 s vs 24.3 s — so the
-    :func:`~cminer_spark.plans.loop.superstep_loop` operators (which
-    include the SSSP relaxation), star CC and ephemeral PageRank use
-    :func:`truncate_lineage`. ANF (sketch and ``anf_exact``), HITS,
-    Katz, eigenvector, funnel and BPE still use this store; each
-    needs its own measured port (BPE keeps it for its persisted-RDD
-    bound, see :mod:`cminer_spark.pipeline.bpe`).
+    adjacency partitioning fix) 15.7 s vs 24.3 s, and the power
+    iterations on the driver (25k-edge transcript graph, 12 rounds,
+    3 fresh JVMs a side, medians) Katz 2.35 s vs 5.05 s, eigenvector
+    2.83 s vs 5.90 s, HITS 6.22 s vs 7.83 s, SALSA 5.91 s vs 7.71 s —
+    so the :func:`~cminer_spark.plans.loop.superstep_loop` operators
+    (which include the SSSP relaxation and the power iterations), star
+    CC and ephemeral PageRank use :func:`truncate_lineage`. ANF (sketch
+    and ``anf_exact``), funnel and BPE still use this store; ANF needs
+    its own measured port, BPE keeps it for its persisted-RDD bound
+    (see :mod:`cminer_spark.pipeline.bpe`).
     """
 
     def __init__(self, spark: SparkSession, tag: str = "state"):

@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 
 from cminer_spark.operators import eigenvector_centrality
+from tests.conftest import count_jobs
 
 
 def _numpy_power(edges, k: int):
@@ -47,7 +48,7 @@ def test_fixed_k_matches_numpy(spark, seed):
     assert set(got) == verts
     for v in verts:
         assert got[v] == pytest.approx(want[v], abs=1e-9), v
-    assert info.iterations == 5 and not info.converged
+    assert info.rounds == 5 and not info.converged
 
 
 def test_convergence_matches_principal_eigenvector(spark):
@@ -68,7 +69,7 @@ def test_convergence_matches_principal_eigenvector(spark):
     )
     assert np.allclose(got, principal, atol=1e-5)
     # λ_max estimate from the iteration agrees with numpy
-    assert info.eigenvalue_estimates[-1] == pytest.approx(
+    assert info.history[-1] == pytest.approx(
         float(w.real.max()), abs=1e-6
     )
     # unit norm
@@ -96,3 +97,16 @@ def test_weight_col(spark):
     got = {r["v_id"]: r["score"] for r in scores.collect()}
     assert got[0] == pytest.approx(principal[0], abs=1e-6)
     assert got[1] == pytest.approx(principal[1], abs=1e-6)
+
+
+def test_fixed_k_job_budget(spark):
+    # set-up is the adjacency count and the initial cut (up to three jobs
+    # under AQE; it observes the first norm); every round is one job, and
+    # the result is a projection of the last round's cut
+    edges = _strongly_connected_edges(5, n=10, extra=10)
+    df = spark.createDataFrame(edges, "src long, dst long")
+    (_x, info), jobs = count_jobs(
+        spark, lambda: eigenvector_centrality(df, max_iter=5, tol=0.0)
+    )
+    assert info.rounds == 5 and len(info.history) == 5
+    assert jobs <= info.rounds + 4, jobs

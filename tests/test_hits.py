@@ -9,7 +9,7 @@ import numpy as np
 from cminer_spark.operators import hits
 from cminer_spark.plans import SuperstepCheckpoint
 
-from tests.conftest import edges_df
+from tests.conftest import count_jobs, edges_df
 from tests.oracles import hits_oracle
 
 
@@ -94,7 +94,7 @@ def test_checkpoint_resume_equals_fresh(spark, tmp_ckpt):
     assert ck.committed_iterations() == [1, 2, 3]
     resumed, ri = hits(df, tol=1e-9, max_iter=60, checkpoint=ck)
     assert ri.resumed_from == 3
-    assert ri.iterations == fi.iterations
+    assert ri.rounds == fi.rounds
     g1 = {r.v_id: (r.hub, r.auth) for r in fresh.collect()}
     g2 = {r.v_id: (r.hub, r.auth) for r in resumed.collect()}
     for k in g1:
@@ -103,10 +103,21 @@ def test_checkpoint_resume_equals_fresh(spark, tmp_ckpt):
 
     # resume at the fixpoint is a no-op
     again, ai = hits(df, tol=1e-9, max_iter=60, checkpoint=ck)
-    assert ai.converged and ai.iterations == fi.iterations
+    assert ai.converged and ai.rounds == fi.rounds
 
 
 def test_empty_graph(spark):
     df = edges_df(spark, [])
     scores, info = hits(df, max_iter=10)
     assert scores.count() == 0 and info.converged
+
+
+def test_fixed_k_job_budget(spark):
+    # set-up is the edge count, one probe over the vertex table (vertex
+    # count and hot-key degrees) and the initial cut; every round is one
+    # job — both L1 normalizers are driver literals
+    pairs = [(i, (i + 1) % 6) for i in range(6)] + [(0, 3), (4, 1)]
+    df = edges_df(spark, pairs)
+    (_s, info), jobs = count_jobs(spark, lambda: hits(df, tol=0.0, max_iter=5))
+    assert info.rounds == 5 and not info.salted
+    assert jobs <= info.rounds + 3, jobs

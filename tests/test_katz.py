@@ -6,7 +6,7 @@ from __future__ import annotations
 import numpy as np
 
 from cminer_spark.operators.katz import katz
-from tests.conftest import edges_df
+from tests.conftest import count_jobs, edges_df
 
 
 def test_katz_path_closed_form(spark):
@@ -43,7 +43,7 @@ def test_katz_matches_numpy_iteration(spark):
         x = beta + alpha * (A.T @ x)
     for v in vids:
         assert abs(got[v] - x[idx[v]]) < 1e-9, v
-    assert info.iterations == k and not info.converged
+    assert info.rounds == k and not info.converged
 
 
 def test_katz_self_loop_geometric(spark):
@@ -70,5 +70,15 @@ def test_warm_start_same_fixpoint_fewer_supersteps(spark):
     b = {r.v_id: r.katz for r in cold_x.collect()}
     assert set(a) == set(b)
     assert max(abs(a[k] - b[k]) for k in a) < 1e-7
-    assert warm.iterations < cold.iterations
+    assert warm.rounds < cold.rounds
     cold_x.unpersist()
+
+
+def test_fixed_k_job_budget(spark):
+    # set-up is the adjacency count and the initial cut (a shuffle, up to
+    # three jobs under AQE); every round is one job, and the result is the
+    # last round's cut
+    df = edges_df(spark, [(i, (i + 1) % 6) for i in range(6)] + [(0, 3)])
+    (_x, info), jobs = count_jobs(spark, lambda: katz(df, alpha=0.1, max_iter=5))
+    assert info.rounds == 5 and not info.converged
+    assert jobs <= info.rounds + 4, jobs

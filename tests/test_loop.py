@@ -8,8 +8,8 @@ operators that run on it, on one tiny graph:
     carries the round's stop value.
 
 (a), (b) and (d) cover the operators that take a checkpoint; coloring,
-hash-min CC and landmark BFS take none, so they are checked on (c)
-only."""
+hash-min CC, landmark BFS, Katz, eigenvector and SALSA are checked on
+(c) only (SALSA shares HITS's round body)."""
 
 from __future__ import annotations
 
@@ -17,11 +17,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from cminer_spark.operators import (
+    eigenvector_centrality,
     greedy_coloring,
     hashmin_components,
+    hits,
+    katz,
     label_propagation,
     maximal_independent_set,
     pregel,
+    salsa,
 )
 from cminer_spark.operators.kcore import core_numbers
 from cminer_spark.operators.paths import landmark_distances, shortest_paths
@@ -98,8 +102,13 @@ OPS = {
         lambda df, r, ck: landmark_distances(df, _seeds(df, [0, 13]), max_rounds=r),
         20,
     ),
+    "katz": (lambda df, r, ck: katz(df, max_iter=r), 4),
+    # the graph is a DAG: its walk mass dies out after 13 rounds
+    "eigen": (lambda df, r, ck: eigenvector_centrality(df, max_iter=r), 4),
+    "hits": (lambda df, r, ck: hits(df, max_iter=r, checkpoint=ck), 50),
+    "salsa": (lambda df, r, ck: salsa(df, max_iter=r), 4),
 }
-RESUMABLE = {"lpa", "mis", "kcore", "pregel", "sssp"}
+RESUMABLE = {"lpa", "mis", "kcore", "pregel", "sssp", "hits"}
 
 
 def _rows(df):
