@@ -280,6 +280,29 @@ def e_pagerank8_synth(ctx):
     return run
 
 
+def e_pagerank_durable_synth(ctx):
+    import tempfile
+
+    from cminer_spark.operators import pagerank
+    from cminer_spark.plans import SuperstepCheckpoint
+
+    def run():
+        with tempfile.TemporaryDirectory(prefix="cminer_pr_ckpt_") as d:
+            _r, info = pagerank(
+                ctx.synth_edges,
+                tol=0.0,
+                max_iter=8,
+                checkpoint=SuperstepCheckpoint(ctx.spark, d),
+            )
+        print(
+            f"  setup={info.setup_sec}s steps={info.superstep_secs}",
+            file=sys.stderr,
+        )
+        return info
+
+    return run
+
+
 def e_cc_full_synth(ctx):
     from cminer_spark.operators import connected_components
 

@@ -1,10 +1,11 @@
 """Per-superstep checkpoint with per-partition lineage + metrics.
 
-The iterative operators that take a ``checkpoint`` — PageRank, star
-CC, HITS, SSSP, and through
-:func:`~cminer_spark.plans.loop.superstep_loop` LPA, MIS, k-core and
+The iterative operators that take a ``checkpoint`` — star CC
+directly, and through :func:`~cminer_spark.plans.loop.superstep_loop`
+PageRank, HITS/SALSA, SSSP, LPA, MIS, k-core and
 :func:`~cminer_spark.operators.pregel.pregel` — route their
-per-iteration state through this store when given one.
+per-iteration state through this store when given one (Katz,
+eigenvector and WL run on the same driver but take no checkpoint).
 Responsibilities:
 
 1. **Lineage truncation** — each superstep's plan would otherwise
@@ -228,8 +229,8 @@ class EphemeralStateStore:
     3 fresh JVMs a side, medians) Katz 2.35 s vs 5.05 s, eigenvector
     2.83 s vs 5.90 s, HITS 6.22 s vs 7.83 s, SALSA 5.91 s vs 7.71 s —
     so the :func:`~cminer_spark.plans.loop.superstep_loop` operators
-    (which include the SSSP relaxation and the power iterations), star
-    CC and ephemeral PageRank use :func:`truncate_lineage`. ANF (sketch
+    (which include PageRank, the SSSP relaxation and the power
+    iterations) and star CC use :func:`truncate_lineage`. ANF (sketch
     and ``anf_exact``), funnel and BPE still use this store; ANF needs
     its own measured port, BPE keeps it for its persisted-RDD bound
     (see :mod:`cminer_spark.pipeline.bpe`).

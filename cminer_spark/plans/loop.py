@@ -1,7 +1,7 @@
 """One superstep driver for the vertex-state loops.
 
-LPA, MIS, greedy coloring, k-core, hash-min CC, the generic
-:func:`~cminer_spark.operators.pregel.pregel`, the frontier
+PageRank, LPA, MIS, greedy coloring, k-core, hash-min CC, the
+generic :func:`~cminer_spark.operators.pregel.pregel`, the frontier
 relaxation behind shortest paths, landmark distances and k-hop
 neighborhoods (:mod:`cminer_spark.operators.paths`), the power
 iterations (Katz, eigenvector, HITS/SALSA) and WL color refinement
@@ -11,7 +11,8 @@ plan starts from a scan.
 :func:`superstep_loop` owns everything around the round body:
 
 * **resume** — with a durable checkpoint the loop restarts from
-  ``checkpoint.latest()``; when that committed round recorded a stop
+  ``checkpoint.latest()``, which must hold every column of ``state0``
+  (else ``ValueError``); when that committed round recorded a stop
   value of 0 the state is a fixpoint and the loop returns at once,
   running zero rounds;
 * **loop conf** — the rounds run under
@@ -29,7 +30,9 @@ plan starts from a scan.
   k-core 16 rounds 6.15 s vs 8.73 s, hash-min CC 10 rounds 3.87 s vs
   4.66 s, LPA 10 rounds 3.85 s vs 5.05 s;
 * **record** — :class:`LoopInfo` holds the last round, whether the
-  stop fired, where the run resumed from and the per-round stop values.
+  stop fired, where the run resumed from, the per-round stop values
+  and each round's wall time, from the round body's start to the end
+  of the state write and the stop read.
 
 One round is one Spark job (the state write) in an ephemeral run. The
 round body ``step(state, rnd)`` returns the new state; it may carry
@@ -39,6 +42,7 @@ driver keeps only the columns of ``state0``.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -56,6 +60,7 @@ class LoopInfo:
     converged: bool = False
     resumed_from: int | None = None
     history: list = field(default_factory=list)
+    round_secs: list = field(default_factory=list)
 
     @property
     def uncolored(self) -> list:
@@ -83,17 +88,26 @@ def superstep_loop(
         resume = checkpoint.latest()
         if resume is not None:
             start, state, meta = resume
+            missing = [c for c in cols if c not in state.columns]
+            if missing:
+                raise ValueError(
+                    f"{name}: checkpoint {checkpoint.dir} round {start} lacks "
+                    f"the state columns {missing}; it was written by another "
+                    "operator, mode or state layout"
+                )
             info.resumed_from = info.rounds = start
             if meta["metrics"].get("stop") == 0:
                 info.converged = True
                 return state, info
-    # under the session conf: inside the loop conf this cut saves a job
+    # under the caller's conf: inside the loop conf this cut saves a job
     # or two of set-up but measured no faster (3 fresh-JVM samples a
-    # side over every driver operator, graph_loops-sized graph)
+    # side over every driver operator, graph_loops-sized graph); PageRank,
+    # whose initial state is its set-up probe, calls the driver inside it
     state = truncate_lineage(state)
 
     with superstep_conf(state0.sparkSession, n_rows):
         for rnd in range(start + 1, max_rounds + 1):
+            t0 = time.perf_counter()
             new = step(state, rnd)
             obs = None
             if stop is not None:
@@ -106,9 +120,10 @@ def superstep_loop(
                 else truncate_lineage(new)
             )
             info.rounds = rnd
+            val = None if obs is None else obs.get["stop"]
+            info.round_secs.append(round(time.perf_counter() - t0, 3))
             if obs is None:
                 continue
-            val = obs.get["stop"]
             info.history.append(val)
             if not val:
                 info.converged = True

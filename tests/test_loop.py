@@ -3,15 +3,21 @@ operators that run on it, on one tiny graph:
 
 (a) a run killed after round 1 and resumed equals a fresh run;
 (b) resuming at a committed fixpoint runs zero rounds;
-(c) every round costs exactly one Spark job;
+(c) every round costs exactly one Spark job and records its wall time;
 (d) a durable round writes its commit marker once, and that marker
     carries the round's stop value.
 
 (a), (b) and (d) cover the operators that take a checkpoint; coloring,
-hash-min CC, landmark BFS, Katz, eigenvector and SALSA are checked on
-(c) only (SALSA shares HITS's round body)."""
+hash-min CC, landmark BFS, Katz, eigenvector, SALSA and fixed-k
+PageRank are checked on (c) only (SALSA shares HITS's round body,
+fixed-k PageRank convergence-mode PageRank's).
+
+A resume from a checkpoint whose state lacks a column of the loop's
+state raises ``ValueError``."""
 
 from __future__ import annotations
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,23 +25,23 @@ from pyspark.sql import functions as F
 from cminer_spark.operators import (
     eigenvector_centrality,
     greedy_coloring,
-    hashmin_components,
     hits,
     katz,
     label_propagation,
     maximal_independent_set,
+    pagerank,
     pregel,
     salsa,
 )
 from cminer_spark.operators.kcore import core_numbers
 from cminer_spark.operators.paths import landmark_distances, shortest_paths
+from cminer_spark.operators.pregel import _hashmin
 from cminer_spark.plans import loop
 from cminer_spark.plans.checkpoint import (
     SuperstepCheckpoint,
     _HadoopIO,
     truncate_lineage,
 )
-from cminer_spark.plans.loop import LoopInfo
 from tests.conftest import edges_df
 
 # two 4-cliques joined by a 3-edge path, plus a pendant tail
@@ -88,10 +94,7 @@ OPS = {
     ),
     "pregel": (_min_label, 20),
     "coloring": (lambda df, r, ck: greedy_coloring(df, max_rounds=r), 20),
-    "hashmin": (
-        lambda df, r, ck: (hashmin_components(df, r), LoopInfo(rounds=r)),
-        4,
-    ),
+    "hashmin": (lambda df, r, ck: _hashmin(df, r, None, False), 4),
     "sssp": (
         lambda df, r, ck: shortest_paths(
             df, _seeds(df, [0]), directed=False, max_rounds=r, checkpoint=ck
@@ -107,8 +110,17 @@ OPS = {
     "eigen": (lambda df, r, ck: eigenvector_centrality(df, max_iter=r), 4),
     "hits": (lambda df, r, ck: hits(df, max_iter=r, checkpoint=ck), 50),
     "salsa": (lambda df, r, ck: salsa(df, max_iter=r), 4),
+    "pagerank": (
+        lambda df, r, ck: pagerank(df, tol=0.0, max_iter=r, checkpoint=ck),
+        4,
+    ),
+    # r iterations take r + 1 rounds: the stop reads a round late
+    "pagerank_tol": (
+        lambda df, r, ck: pagerank(df, tol=1e-3, max_iter=r, checkpoint=ck),
+        100,
+    ),
 }
-RESUMABLE = {"lpa", "mis", "kcore", "pregel", "sssp", "hits"}
+RESUMABLE = {"lpa", "mis", "kcore", "pregel", "sssp", "hits", "pagerank_tol"}
 
 
 def _rows(df):
@@ -148,6 +160,7 @@ def test_superstep_loop_contract(spark, tmp_ckpt, monkeypatch, op):
     )
     assert info.rounds > 1
     assert jobs == [1] * info.rounds  # (c)
+    assert len(info.round_secs) == info.rounds
     if op not in RESUMABLE:
         return
     assert info.converged
@@ -174,3 +187,18 @@ def test_superstep_loop_contract(spark, tmp_ckpt, monkeypatch, op):
     assert ainfo.converged and ainfo.rounds == rinfo.rounds  # (b)
     assert ck.committed_iterations() == committed
     assert _rows(again) == _rows(fresh)
+
+
+def test_resume_rejects_foreign_state(spark, tmp_ckpt):
+    """A committed round whose state lacks a column of the loop's state
+    (here PageRank's older ``(v_id, rank)`` layout) is refused by name,
+    not failed on inside the round body."""
+    df = edges_df(spark, PAIRS)
+    ck = SuperstepCheckpoint(spark, tmp_ckpt)
+    old = spark.createDataFrame(
+        [(v, 1 / 14) for v in range(14)], "v_id long, rank double"
+    )
+    ck.save(1, old, {"round": 1, "stop": 0.5})
+    want = f"checkpoint {ck.dir} round 1 lacks the state columns ['im']"
+    with pytest.raises(ValueError, match=re.escape(want)):
+        pagerank(df, tol=0.0, max_iter=4, checkpoint=ck)

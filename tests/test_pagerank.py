@@ -50,24 +50,46 @@ def test_directed_cycle_uniform(spark):
     assert info.converged
 
 
-def test_fixed_k_parity_and_job_budget(spark):
-    """tol=0 runs exactly k supersteps (the k-step power iteration,
-    dangling and isolated vertices included) for at most k + 3 Spark
-    jobs: the edge count, one set-up probe, one job per superstep,
-    and one more only when the adjacency is salted."""
+# mode -> (pagerank kwargs, job budget for k supersteps / it iterations)
+MODES = {
+    "fixed": ({"tol": 0.0}, lambda k, it: k + 2),
+    "tol": ({"tol": 1e-6, "max_iter": 200}, lambda k, it: it + 4),
+    "durable": ({"tol": 0.0, "durable": True}, lambda k, it: 2 * k + 4),
+}
+
+
+@pytest.mark.parametrize("mode", sorted(MODES))
+def test_fixed_k_parity_and_job_budget(spark, tmp_ckpt, mode):
+    """Each mode matches the power-iteration oracle (k steps, or to
+    convergence; dangling and isolated vertices included) within its
+    job budget: fixed-k is the edge count, the set-up cut and one job
+    per superstep; convergence mode runs one round more than its
+    iterations (the stop reads a round late); a durable round adds the
+    checkpoint's lineage read-back."""
     k = 5
     pairs = [(i, (i + 1) % 6) for i in range(6)] + [(0, 3), (2, 7), (7, 8)]
     df = edges_df(spark, pairs)
     vdf = spark.createDataFrame([(9,)], "v_id long")
+    kw, budget = MODES[mode]
+    kw = {"max_iter": k} | kw
+    if kw.pop("durable", False):
+        kw["checkpoint"] = SuperstepCheckpoint(spark, tmp_ckpt)
     (ranks, info), jobs = count_jobs(
-        spark, lambda: pagerank(df, tol=0.0, max_iter=k, vertices=vdf)
+        spark, lambda: pagerank(df, vertices=vdf, **kw)
     )
-    assert info.iterations == k and len(info.superstep_secs) == k
-    assert jobs <= k + 3, jobs
+    if mode == "tol":
+        assert info.converged
+        assert len(info.superstep_secs) == info.rounds == info.iterations + 1
+        want = pagerank_oracle(
+            [(s, d, 1.0) for s, d in pairs], vertices=[9], tol=1e-6
+        )
+    else:
+        assert info.iterations == k and len(info.superstep_secs) == k
+        want = pagerank_oracle(
+            [(s, d, 1.0) for s, d in pairs], vertices=[9], tol=0.0, max_iter=k
+        )
+    assert jobs <= budget(k, info.iterations), jobs
     got = {r.v_id: r.rank for r in ranks.collect()}
-    want = pagerank_oracle(
-        [(s, d, 1.0) for s, d in pairs], vertices=[9], tol=0.0, max_iter=k
-    )
     assert set(got) == set(want)
     a = np.array([got[v] for v in sorted(got)])
     b = np.array([want[v] for v in sorted(want)])
@@ -128,7 +150,8 @@ def test_checkpoint_resume_equals_fresh(spark, tmp_ckpt):
     # interrupted run: stop after 3 supersteps
     ck = SuperstepCheckpoint(spark, tmp_ckpt)
     pagerank(df, tol=1e-9, max_iter=3, checkpoint=ck)
-    assert ck.committed_iterations() == [1, 2, 3]
+    # 3 iterations commit 4 rounds: round i + 1 holds iteration i's ranks
+    assert ck.committed_iterations() == [1, 2, 3, 4]
 
     resumed, info = pagerank(df, tol=1e-9, max_iter=50, checkpoint=ck)
     assert info.resumed_from == 3
@@ -142,7 +165,7 @@ def test_checkpoint_resume_equals_fresh(spark, tmp_ckpt):
     # lineage metadata recorded per superstep
     _, _, meta = ck.latest()
     assert meta["partitions"] and all("content_hash" in p for p in meta["partitions"])
-    assert "l1_delta" in meta["metrics"]
+    assert "stop" in meta["metrics"]  # the L1 delta (0 once under tol)
 
 
 def test_resume_after_convergence_is_noop(spark, tmp_ckpt):
