@@ -15,7 +15,14 @@ Usage::
         --explain-tag before|after --plans-dir DIR      # plan dump only
     python bench_extra.py --list
 
-Environment mirrors bench.py: $SPARK_GRAFT_SF_DIR, $SPARK_GRAFT_CPUS.
+Environment mirrors bench.py:
+
+* ``SPARK_GRAFT_SF_DIR`` — the input tables (default sf0.1);
+* ``SPARK_GRAFT_CPUS`` — ``local[N]`` cores (default 32);
+* ``CMINER_DRIVER_MEM`` — driver heap maximum (default 48g);
+* ``BENCH_XMS`` — driver heap minimum, pre-touched at start (default
+  16g); it must fit in physical memory, so a small host needs e.g.
+  ``SPARK_GRAFT_CPUS=4 CMINER_DRIVER_MEM=3g BENCH_XMS=2g``.
 """
 
 from __future__ import annotations
@@ -777,6 +784,13 @@ def _explain_frames(frames, name, explain_tag, plans_dir):
         print(f"wrote {out}", file=sys.stderr)
 
 
+def _bytes(size: str) -> int:
+    """A JVM memory size (``16g``, ``512m``, ``2048k``, bytes) in bytes."""
+    scale = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    unit = size[-1:].lower()
+    return int(size[:-1]) * scale[unit] if unit in scale else int(size)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -804,13 +818,24 @@ def main() -> None:
     names = [a for a in args if not a.startswith("-")]
 
     os.environ.setdefault("CMINER_DRIVER_MEM", "48g")
+    xms = os.environ.get("BENCH_XMS", "16g")
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    if _bytes(xms) > phys:
+        # the pre-touched heap cannot be mapped: the JVM would die at
+        # start and leave an hs_err_pid*.log behind
+        sys.exit(
+            f"-Xms{xms} exceeds this host's {phys / (1 << 30):.1f} GiB of "
+            "physical memory; set BENCH_XMS (and CMINER_DRIVER_MEM, "
+            "SPARK_GRAFT_CPUS) to fit, e.g. SPARK_GRAFT_CPUS=4 "
+            "CMINER_DRIVER_MEM=3g BENCH_XMS=2g"
+        )
     spark = get_spark(
         "cminer-bench-extra",
         master=f"local[{cpus}]",
         shuffle_partitions=2 * cpus,
         extra_conf={
             "spark.driver.extraJavaOptions": (
-                f"-Xms{os.environ.get('BENCH_XMS', '16g')} -XX:+AlwaysPreTouch"
+                f"-Xms{xms} -XX:+AlwaysPreTouch"
             ),
         },
     )

@@ -151,23 +151,27 @@ def connected_components(
     # to the (shrinking) star state, AQE off — each round's star
     # contraction is ONE scheduler job instead of ~9 query-stage jobs.
     with superstep_conf(spark, prev_fp[0]):
-        for rnd in range(start_round + 1, max_rounds + 1):
-            # The convergence fingerprint rides the state
-            # materialization via df.observe() — one job per round.
-            e2, obs = _observe_fingerprint(
-                _small_star(_large_star(e)), f"cc_fp_{rnd}"
-            )
-            e = (
-                checkpoint.save(rnd, e2, {"round": rnd})
-                if checkpoint is not None
-                else truncate_lineage(e2)
-            )
-            fp = _fingerprint_of(obs)
-            info.rounds = rnd
-            if fp == prev_fp:
-                info.converged = True
-                break
-            prev_fp = fp
+        try:
+            for rnd in range(start_round + 1, max_rounds + 1):
+                # The convergence fingerprint rides the state
+                # materialization via df.observe() — one job per round.
+                e2, obs = _observe_fingerprint(
+                    _small_star(_large_star(e)), f"cc_fp_{rnd}"
+                )
+                e = (
+                    checkpoint.save(rnd, e2, {"round": rnd})
+                    if checkpoint is not None
+                    else truncate_lineage(e2)
+                )
+                fp = _fingerprint_of(obs)
+                info.rounds = rnd
+                if fp == prev_fp:
+                    info.converged = True
+                    break
+                prev_fp = fp
+        finally:
+            if checkpoint is not None:
+                checkpoint.flush()  # every round reported is committed
 
         # Converged state is a set of stars (child → root=min).
         # Components: every child maps to its root, roots map to

@@ -13,7 +13,7 @@ One round body on :func:`~cminer_spark.plans.loop.superstep_loop` in
 every mode — fixed-k, convergence, durable, warm start and resume (the
 driver owns resume, the loop conf, the ``Observation`` stop and the
 ``localCheckpoint`` or durable save); a round is one Spark job, two
-durable (the checkpoint's state write and its lineage read-back).
+durable (the checkpoint's cut, and its parquet write in the background).
 Scale design (SURVEY §2.7, §4):
 
 * the normalized adjacency (parallel multigraph edges sum weights) is

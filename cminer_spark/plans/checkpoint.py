@@ -8,18 +8,47 @@ per-iteration state through this store when given one (Katz,
 eigenvector and WL run on the same driver but take no checkpoint).
 Responsibilities:
 
-1. **Lineage truncation** — each superstep's plan would otherwise
-   grow unboundedly (SURVEY §7.3); writing + reading back cuts the
-   plan at a stable parquet scan.
-2. **Exact resume** — a superstep is committed only when its metrics
+1. **Lineage cut** — each superstep's plan would otherwise grow
+   unboundedly (SURVEY §7.3); ``save`` cuts it with ``localCheckpoint``
+   (:func:`truncate_lineage`), exactly as an ephemeral round does, so
+   the next round reads in-memory state that keeps the loop's
+   partitioning. That cut is the one job on the round's critical path.
+2. **Durable record, off the critical path** — the cut is then written
+   as parquet on a background thread (an ``InheritableThread``, so its
+   jobs carry the caller's job group) while the next round runs. At
+   most one write is in flight per handle: ``save`` joins the previous
+   round's write before starting its own and re-raises its error, so
+   markers commit in order. :meth:`SuperstepCheckpoint.flush` joins the
+   in-flight write and re-raises its error; ``latest()``,
+   ``committed_iterations()`` and ``clear()`` call it, and so do the
+   loops that save (:func:`~cminer_spark.plans.loop.superstep_loop` in
+   a ``finally``, star CC after its rounds), so when an operator call
+   returns or raises no writer is alive and every round it reports is
+   committed. A hard kill loses at most the round still in flight,
+   which a resume redoes.
+3. **Exact resume** — a superstep is committed only when its metrics
    JSON exists (written strictly after the parquet ``_SUCCESS``);
    ``latest()`` returns the highest committed iteration, so a killed
    run resumes from the last complete superstep and produces results
    identical to an uninterrupted run (tested).
-3. **Per-partition lineage + convergence metrics** — for each
-   superstep we record per-partition row counts and order-insensitive
-   content hashes (``sum(xxhash64(struct(*)))`` per partition) plus
-   the algorithm's convergence metrics (e.g. L1 delta).
+4. **Per-partition lineage + convergence metrics** — the write carries
+   an ``Observation`` of the row count and, per partition ``p`` of the
+   cut (the write's tasks), ``count_if(spark_partition_id() = p)`` and
+   an order-insensitive content hash
+   ``bit_xor(if(spark_partition_id() = p, xxhash64(struct(*)), 0))``,
+   so the marker's ``partitions`` (one entry per write task that wrote
+   rows) describe the files it commits at no extra job; the marker
+   also holds the algorithm's convergence metrics (e.g. the stop
+   value).
+
+Measured on a 25,899-edge transcript graph (``durable_resume`` size:
+1500 conversations, 24 turns on average) at ``local[4]``, fixed-8
+PageRank, one JVM, 5 interleaved reps after a warm-up, superstep p50:
+0.416 s with the former synchronous parquet write, read-back and
+lineage read-back job; 0.338 s with the cut and a synchronous write;
+0.185 s with the write in the background; 0.170 s for an ephemeral
+round. The gain is the overlap, not the job count (18 jobs a call in
+all three durable variants).
 
 Layout::
 
@@ -46,7 +75,8 @@ import os
 import shutil
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import InheritableThread
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -133,6 +163,8 @@ class SuperstepCheckpoint:
         self.dir = directory.rstrip("/")
         self.io = _HadoopIO(spark, self.dir)
         self.io.mkdirs(f"{self.dir}/meta")
+        self._writer: InheritableThread | None = None
+        self._error: BaseException | None = None
 
     # -- paths ---------------------------------------------------------
     def _data_path(self, i: int) -> str:
@@ -143,6 +175,7 @@ class SuperstepCheckpoint:
 
     # -- api -----------------------------------------------------------
     def committed_iterations(self) -> list[int]:
+        self.flush()
         out = []
         for name in self.io.listdir(f"{self.dir}/meta"):
             if name.startswith("iter_") and name.endswith(".json"):
@@ -161,51 +194,71 @@ class SuperstepCheckpoint:
     def save(
         self, i: int, df: DataFrame, metrics: dict | Callable[[], dict]
     ) -> DataFrame:
-        """Write superstep state + lineage, return the read-back frame
-        (lineage-truncated) for the next superstep. ``metrics`` may be
-        a zero-argument callable: it is resolved after the state write,
-        so it can read an ``Observation`` that rode the write (e.g. the
-        convergence delta), and the marker is written once, whole."""
-        path = self._data_path(i)
-        df.write.mode("overwrite").parquet(path)
-        # explicit schema: skips the footer-sampling schema-inference
-        # job the bare read would run per superstep
-        back = self.spark.read.schema(df.schema).parquet(path)
-        lineage = [
-            {"partition": r["p"], "rows": r["rows"], "content_hash": r["h"]}
-            for r in (
-                back.groupBy(F.spark_partition_id().alias("p"))
-                .agg(
-                    F.count(F.lit(1)).alias("rows"),
-                    # bit_xor: order-insensitive content hash, overflow-free
-                    # under ANSI mode
-                    F.expr(
-                        "bit_xor(xxhash64(struct("
-                        + ", ".join(f"`{c}`" for c in back.columns)
-                        + ")))"
-                    ).alias("h"),
-                )
-                .collect()
-            )
-        ]
-        meta = {
-            "iteration": i,
-            "rows": int(sum(p["rows"] for p in lineage)),
-            "partitions": lineage,
-            "metrics": metrics() if callable(metrics) else metrics,
-        }
-        self.io.write_text_atomic(self._meta_path(i), json.dumps(meta))
-        return back
+        """Cut superstep ``i``'s state as an ephemeral round does
+        (:func:`truncate_lineage`) and return the cut for the next round;
+        its durable write runs in the background. ``metrics`` may be a
+        zero-argument callable: it is resolved after the cut, so it can
+        read an ``Observation`` that rode it (e.g. the convergence
+        delta). The previous round's write is joined first and its error
+        re-raised, so at most one write is in flight and the markers
+        commit in order."""
+        cut = truncate_lineage(df)
+        meta = {"iteration": i, "metrics": metrics() if callable(metrics) else metrics}
+        self.flush()
+        # inherits the caller's job group, so the write's jobs are
+        # attributed to the caller
+        self._writer = InheritableThread(target=self._write, args=(cut, meta))
+        self._writer.start()
+        return cut
+
+    def _write(self, cut: DataFrame, meta: dict) -> None:
+        """Write the cut as parquet with its per-partition lineage
+        observed on the same job, then the commit marker. An error is
+        kept for :meth:`flush` to raise."""
+        try:
+            i = meta["iteration"]
+            pid = F.spark_partition_id()
+            h = F.xxhash64(F.struct(*[F.col(f"`{c}`") for c in cut.columns]))
+            parts = range(cut.rdd.getNumPartitions())
+            obs = Observation(f"checkpoint_lineage_{i}")
+            aggs = [F.count(F.lit(1)).alias("rows")]
+            for p in parts:
+                aggs.append(F.count_if(pid == p).alias(f"rows_{p}"))
+                # bit_xor: order-insensitive content hash, overflow-free
+                # under ANSI mode
+                aggs.append(F.bit_xor(F.when(pid == p, h).otherwise(0)).alias(f"h_{p}"))
+            cut.observe(obs, *aggs).write.mode("overwrite").parquet(self._data_path(i))
+            got = obs.get
+            meta["rows"] = got["rows"]
+            meta["partitions"] = [
+                {"partition": p, "rows": got[f"rows_{p}"], "content_hash": got[f"h_{p}"]}
+                for p in parts
+                if got[f"rows_{p}"]
+            ]
+            self.io.write_text_atomic(self._meta_path(i), json.dumps(meta))
+        except BaseException as e:  # re-raised by flush()
+            self._error = e
+
+    def flush(self) -> None:
+        """Join the in-flight write, if any, and re-raise its error."""
+        writer, self._writer = self._writer, None
+        if writer is None:
+            return
+        writer.join()
+        error, self._error = self._error, None
+        if error is not None:
+            raise error
 
     def clear(self) -> None:
+        self.flush()
         self.io.delete_recursive(self.dir)
         self.io.mkdirs(f"{self.dir}/meta")
 
 
 def truncate_lineage(df: DataFrame) -> DataFrame:
-    """Checkpoint-less lineage cut for un-checkpointed runs:
-    ``localCheckpoint`` keeps iterative plans bounded without a
-    durable store (durable runs use :class:`SuperstepCheckpoint`)."""
+    """The lineage cut of every superstep: ``localCheckpoint`` keeps
+    iterative plans bounded; :class:`SuperstepCheckpoint` adds the
+    durable parquet record beside it."""
     return df.localCheckpoint(eager=True)
 
 

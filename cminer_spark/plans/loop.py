@@ -21,10 +21,13 @@ plan starts from a scan.
 * **stop** — the ``stop`` aggregate rides the state write as an
   ``Observation``, so convergence costs no extra Spark job; the loop
   stops when it reads 0 or NULL;
-* **state rule** — ephemeral runs cut lineage with
+* **state rule** — every round cuts lineage with
   :func:`~cminer_spark.plans.checkpoint.truncate_lineage`
-  (``localCheckpoint``); durable runs ``checkpoint.save`` the round,
-  whose one commit marker carries the stop value. Measured on a 24.5k-edge
+  (``localCheckpoint``); a durable run's ``checkpoint.save`` makes the
+  same cut and writes the round's parquet and its one commit marker
+  (which carries the stop value) in the background, overlapping the
+  next round; the loop ``flush``-es the checkpoint in a ``finally``,
+  so every round it reports is committed. Measured on a 24.5k-edge
   transcript graph at ``local[4]`` (5-6 interleaved samples a side),
   ``localCheckpoint`` beat the parquet double-buffer on every loop:
   k-core 16 rounds 6.15 s vs 8.73 s, hash-min CC 10 rounds 3.87 s vs
@@ -32,9 +35,11 @@ plan starts from a scan.
 * **record** — :class:`LoopInfo` holds the last round, whether the
   stop fired, where the run resumed from, the per-round stop values
   and each round's wall time, from the round body's start to the end
-  of the state write and the stop read.
+  of the cut and the stop read — in a durable run including any wait
+  for the previous round's write.
 
-One round is one Spark job (the state write) in an ephemeral run. The
+One round is one Spark job (the cut) in an ephemeral run; a durable
+round adds its background write, a second job off the critical path. The
 round body ``step(state, rnd)`` returns the new state; it may carry
 extra columns (e.g. ``prev_<col>``) for ``stop`` to compare, and the
 driver keeps only the columns of ``state0``.
@@ -106,34 +111,38 @@ def superstep_loop(
     state = truncate_lineage(state)
 
     with superstep_conf(state0.sparkSession, n_rows):
-        for rnd in range(start + 1, max_rounds + 1):
-            t0 = time.perf_counter()
-            new = step(state, rnd)
-            obs = None
-            if stop is not None:
-                obs = Observation(f"{name}_stop_{rnd}")
-                new = new.observe(obs, stop.alias("stop"))
-            new = new.select(*cols)
-            state = (
-                checkpoint.save(rnd, new, _round_metrics(rnd, obs))
-                if checkpoint is not None
-                else truncate_lineage(new)
-            )
-            info.rounds = rnd
-            val = None if obs is None else obs.get["stop"]
-            info.round_secs.append(round(time.perf_counter() - t0, 3))
-            if obs is None:
-                continue
-            info.history.append(val)
-            if not val:
-                info.converged = True
-                break
+        try:
+            for rnd in range(start + 1, max_rounds + 1):
+                t0 = time.perf_counter()
+                new = step(state, rnd)
+                obs = None
+                if stop is not None:
+                    obs = Observation(f"{name}_stop_{rnd}")
+                    new = new.observe(obs, stop.alias("stop"))
+                new = new.select(*cols)
+                state = (
+                    checkpoint.save(rnd, new, _round_metrics(rnd, obs))
+                    if checkpoint is not None
+                    else truncate_lineage(new)
+                )
+                info.rounds = rnd
+                val = None if obs is None else obs.get["stop"]
+                info.round_secs.append(round(time.perf_counter() - t0, 3))
+                if obs is None:
+                    continue
+                info.history.append(val)
+                if not val:
+                    info.converged = True
+                    break
+        finally:
+            if checkpoint is not None:
+                checkpoint.flush()  # every round reported is committed
     return state, info
 
 
 def _round_metrics(rnd: int, obs: Observation | None) -> Callable[[], dict]:
-    """A durable round's marker metrics, read once the state write has
-    filled the stop ``Observation``."""
+    """A durable round's marker metrics, read once the cut has filled
+    the stop ``Observation``."""
     if obs is None:
         return lambda: {"round": rnd}
     return lambda: {"round": rnd, "stop": obs.get["stop"]}

@@ -21,10 +21,13 @@ def pagerank_oracle(
     tol: float = 1e-9,
     max_iter: int = 500,
     seeds: list[int] | None = None,
+    init: dict[int, float] | None = None,
 ) -> dict[int, float]:
     """Power iteration; multigraph parallel edges sum weights; dangling
     mass redistributed via the reset vector (uniform, or uniform over
-    ``seeds`` for personalized runs); L1 convergence err < N*tol."""
+    ``seeds`` for personalized runs); L1 convergence err < N*tol.
+    ``init`` starts from that vector (every vertex), rescaled to sum 1,
+    instead of the reset vector."""
     vs = set(vertices or [])
     for s, d, _ in edges:
         vs.add(s)
@@ -48,6 +51,9 @@ def pagerank_oracle(
     else:
         reset = np.full(n, 1.0 / n)
     x = reset.copy()
+    if init is not None:
+        x = np.array([init[v] for v in vs], dtype=float)
+        x /= x.sum()
     for _ in range(max_iter):
         xlast = x
         x = np.zeros(n)

@@ -13,13 +13,20 @@ PageRank are checked on (c) only (SALSA shares HITS's round body,
 fixed-k PageRank convergence-mode PageRank's).
 
 A resume from a checkpoint whose state lacks a column of the loop's
-state raises ``ValueError``."""
+state raises ``ValueError``. A durable round's background write that
+fails is raised by the operator call, which leaves no writer thread
+alive and a checkpoint that resumes from the last committed round; a
+committed marker's per-partition lineage adds up to its parquet."""
 
 from __future__ import annotations
 
+import functools
+import operator
 import re
+import threading
 
 import pytest
+from pyspark import InheritableThread
 from pyspark.sql import functions as F
 
 from cminer_spark.operators import (
@@ -202,3 +209,52 @@ def test_resume_rejects_foreign_state(spark, tmp_ckpt):
     want = f"checkpoint {ck.dir} round 1 lacks the state columns ['im']"
     with pytest.raises(ValueError, match=re.escape(want)):
         pagerank(df, tol=0.0, max_iter=4, checkpoint=ck)
+
+
+def test_failed_write_raises_and_resumes(spark, tmp_ckpt, monkeypatch):
+    """Round 2's commit marker fails in the background: the call raises
+    that error once no checkpoint writer is alive, round 1 stays the
+    last commit, and a rerun resumes from it to the fresh ranks."""
+    df = edges_df(spark, PAIRS)
+    boom = OSError("marker write failed")
+    write = _HadoopIO.write_text_atomic
+
+    def failing(io, path, text):
+        if path.endswith("/iter_2.json"):
+            raise boom
+        return write(io, path, text)
+
+    monkeypatch.setattr(_HadoopIO, "write_text_atomic", failing)
+    ck = SuperstepCheckpoint(spark, tmp_ckpt)
+    with pytest.raises(OSError) as raised:
+        pagerank(df, tol=0.0, max_iter=4, checkpoint=ck)
+    assert raised.value is boom
+    assert not [t for t in threading.enumerate() if isinstance(t, InheritableThread)]
+    monkeypatch.undo()
+
+    assert ck.latest()[0] == 1
+    resumed, info = pagerank(df, tol=0.0, max_iter=4, checkpoint=ck)
+    fresh, _ = pagerank(df, tol=0.0, max_iter=4)
+    assert info.resumed_from == 1 and info.rounds == 4
+    got, want = dict(_rows(resumed)), dict(_rows(fresh))
+    assert got.keys() == want.keys()
+    assert all(abs(got[v] - want[v]) < 1e-12 for v in want)
+
+
+def test_marker_lineage_matches_parquet(spark, tmp_ckpt):
+    """A committed marker's partitions (one per write task that wrote
+    rows) add up to the parquet it commits: their row counts sum to the
+    marker's and the read-back's, their content hashes XOR to the
+    read-back's."""
+    df = spark.createDataFrame(
+        [(v, v / 7, None if v % 5 else f"s{v}") for v in range(60)],
+        "v_id long, x double, tag string",
+    ).repartition(4, "v_id")
+    ck = SuperstepCheckpoint(spark, tmp_ckpt)
+    ck.save(1, df, {"round": 1})
+    i, back, meta = ck.latest()
+    parts = meta["partitions"]
+    assert i == 1 and len(parts) == 4
+    assert meta["rows"] == sum(p["rows"] for p in parts) == back.count() == 60
+    want = back.select(F.expr("bit_xor(xxhash64(struct(*)))")).first()[0]
+    assert functools.reduce(operator.xor, (p["content_hash"] for p in parts)) == want
