@@ -2,9 +2,16 @@
 
 Implements the two-phase alternating algorithm of Kiveris et al.,
 "Connected Components in MapReduce and Beyond" (SOCC'14) — the
-O(log² n)-round formulation SURVEY §2.7 prescribes — entirely as
-DataFrame group-by/join supersteps. Component ids are canonical:
-the minimum vertex id of the component (FIXTURES.md §4).
+O(log² n)-round formulation SURVEY §2.7 prescribes — as DataFrame
+supersteps. Component ids are canonical: the minimum vertex id of the
+component (FIXTURES.md §4).
+
+One round (large star, then small star) scans its state twice, once per
+half of the symmetric edge list, shuffles three times and joins
+nothing: each star takes its per-vertex minimum as a window
+partitioned by ``u`` over the edge list itself, so the edges stay where
+that exchange put them, and the small star's ``distinct`` is the third
+(measurements in CHANGES.md).
 
 Also provides :func:`hashmin_components`, the simple O(diameter)
 hash-min iteration, which is both a differential oracle for the
@@ -18,9 +25,10 @@ this engine replaces the per-node BFS with whole-graph supersteps.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from cminer_spark.operators.graph import vertex_set
@@ -35,6 +43,9 @@ class CCInfo:
     converged: bool = False
     n_components: int = 0
     resumed_from: int | None = None
+    # each round run by this call, from the round body's start to the
+    # end of the cut and the fingerprint read
+    round_secs: list = field(default_factory=list)
 
 
 def _sym(e: DataFrame) -> DataFrame:
@@ -43,34 +54,39 @@ def _sym(e: DataFrame) -> DataFrame:
 
 def _large_star(e: DataFrame) -> DataFrame:
     """For each u: connect every strictly-larger neighbor to
-    min(Γ(u) ∪ {u})."""
-    sym = _sym(e)
-    mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-    mins = mins.select("u", F.least("u", "mn").alias("m"))
+    m = min(Γ(u) ∪ {u}). The minimum is a window over the symmetric
+    edge list partitioned by u, so the edges stay where that one
+    exchange put them; duplicates are left for the small star, whose
+    minimum and final ``distinct`` ignore them."""
+    m = F.least("u", F.min("v").over(Window.partitionBy("u")))
     return (
-        sym.join(mins.hint("shuffle_hash"), "u")
+        _sym(e)
+        .select("u", "v", m.alias("m"))
         .where(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
     )
 
 
 def _small_star(e: DataFrame) -> DataFrame:
-    """Orient edges high→low; for each u: connect all small neighbors
-    (and u itself) to the minimum."""
-    dirE = e.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    ).where(F.col("u") != F.col("v"))
-    mins = dirE.groupBy("u").agg(F.min("v").alias("m"))
-    moved = (
-        dirE.join(mins.hint("shuffle_hash"), "u")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .union(mins.select(F.col("u"), F.col("m").alias("v")))
+    """For each u: connect all smaller neighbors (and u itself) to the
+    minimum. The large star's output is already oriented (u > v), so
+    the minimum is a window over it partitioned by u, and one row
+    emits both of its edges."""
+    # a window may not sit inside a generator: the minimum gets a
+    # select of its own
+    e = e.select("u", "v", F.min("v").over(Window.partitionBy("u")).alias("m"))
+    moved = F.explode(
+        F.array(
+            F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
+            F.struct(F.col("u").alias("u"), F.col("m").alias("v")),
+        )
+    )
+    return (
+        e.select(moved.alias("p"))
+        .select("p.u", "p.v")
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    return moved
 
 
 def _observe_fingerprint(e: DataFrame, name: str) -> tuple[DataFrame, Observation]:
@@ -153,6 +169,7 @@ def connected_components(
     with superstep_conf(spark, prev_fp[0]):
         try:
             for rnd in range(start_round + 1, max_rounds + 1):
+                t0 = time.perf_counter()
                 # The convergence fingerprint rides the state
                 # materialization via df.observe() — one job per round.
                 e2, obs = _observe_fingerprint(
@@ -165,6 +182,7 @@ def connected_components(
                 )
                 fp = _fingerprint_of(obs)
                 info.rounds = rnd
+                info.round_secs.append(round(time.perf_counter() - t0, 3))
                 if fp == prev_fp:
                     info.converged = True
                     break

@@ -41,6 +41,7 @@ def _check(spark, pairs, vertices=()):
     assert got == want
     assert info.converged
     assert info.n_components == len(want)
+    return info
 
 
 def test_two_cliques_with_bridge(spark):
@@ -61,6 +62,17 @@ def test_star_cc_job_budget(spark):
     assert info.converged and info.n_components == 2
     assert jobs == info.rounds + 3, (jobs, info.rounds)
     assert _got_components(labels) == _nx_components(pairs)
+
+
+def test_planted_hub_past_window_buffer(spark):
+    """One hub with 5,000 leaves beside a 4-chain. The star rounds take
+    their minimums with windows partitioned by vertex: round 1's small
+    star puts the hub's 5,000 edges in one window partition, round 2's
+    large star leaf 0's, both past Spark's in-memory window buffer
+    (``spark.sql.windowExec.buffer.in.memory.threshold``, 4,096 rows)."""
+    hub = [(leaf, 5000) for leaf in range(5000)]
+    chain = [(10001, 10002), (10002, 10003), (10003, 10004)]
+    assert _check(spark, hub + chain).n_components == 2
 
 
 def test_chain_and_isolated(spark):
@@ -96,9 +108,12 @@ def test_cc_resume_equals_fresh(spark, tmp_ckpt):
     fresh, _ = connected_components(df)
 
     ck = SuperstepCheckpoint(spark, tmp_ckpt)
-    connected_components(df, max_rounds=2, checkpoint=ck)
+    _, first = connected_components(df, max_rounds=2, checkpoint=ck)
+    assert len(first.round_secs) == first.rounds == 2
     resumed, info = connected_components(df, checkpoint=ck)
     assert info.resumed_from == 2
+    # a resumed call times only the rounds it runs itself
+    assert len(info.round_secs) == info.rounds - 2
     assert _got_components(fresh) == _got_components(resumed)
 
 

@@ -201,3 +201,21 @@ def test_lpa_round_argmax_is_combinable_no_window(spark):
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" in plan
     assert "ObjectHashAggregate" in plan  # partial + final mode agg
+
+
+def test_star_cc_round_three_exchanges_no_join(spark):
+    """One star CC round shuffles three times and joins nothing: the
+    large star's window minimum, the small star's, and the final
+    distinct."""
+    from cminer_spark.operators.components import _large_star, _small_star
+    from cminer_spark.plans.loopconf import superstep_conf
+
+    e = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (7, 8)], "u long, v long"
+    ).localCheckpoint()
+    with superstep_conf(spark, 4):
+        r = _small_star(_large_star(e))
+        assert sorted(map(tuple, r.collect())) == [(2, 1), (3, 1), (4, 2), (8, 7)]
+        plan = r._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 3, plan
+    assert "Join" not in plan, plan
